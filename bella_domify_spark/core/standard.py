@@ -16,7 +16,6 @@ Parity: /root/reference/server/protocol/standard_domtree.py:6-375 —
 
 from __future__ import annotations
 
-import json
 import re
 from typing import List, Optional
 
@@ -161,8 +160,3 @@ def to_standard(tree: DomTree, source_file: Optional[dict] = None) -> dict:
     _calc_paths(root)
     root["tokens"] = sum(c["tokens"] for c in root["children"])
     return {"root": root}
-
-
-def to_standard_json(tree: DomTree, source_file: Optional[dict] = None) -> str:
-    return json.dumps(to_standard(tree, source_file), ensure_ascii=False,
-                      separators=(",", ":"))

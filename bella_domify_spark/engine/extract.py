@@ -1,68 +1,71 @@
-"""The distributed extraction plan.
+"""The distributed extraction plan and the engine's query-facing UDFs.
 
-Pipeline (SURVEY.md §3.4):
+One extraction path: ``parsers.dispatch.PARSERS`` is the only format
+router and ``parsers.dispatch.parse_batch`` (Arrow text array → Arrow
+record struct) the only batch-parse body. Two plans run it:
+
+- ``engine.manifest.run_resumable`` (the production path) parses INSIDE
+  its per-bucket sink's ``mapInArrow`` stage — one JVM↔Python crossing
+  from scan to committed bucket files;
+- ``extract_transcripts`` / ``apply_parse`` (DataFrame in, DataFrame out)
+  call it through ``parse_udf``, an Arrow UDF returning the record struct
+  (one ``ArrowEvalPython`` node), and project the struct into
+  ``OUTPUT_COLUMNS``.
+
+``extract_transcripts`` pipeline (SURVEY.md §3.4):
 
     scan transcripts → salt → repartition(conv_id, salt) →
-    Arrow-batched parse UDF → (optional) stable (conv_id, turn_idx) order →
-    sink + per-partition manifests
-
-Scale notes (designed for ~10^12 turns / 100 TB on 1000 executors, tested on
-local[32]):
+    Arrow-batched parse UDF → (optional) stable (conv_id, turn_idx) order
 
 - **One shuffle** feeds the parse stage. Salting: ``salt = pmod(xxhash64(
   conv_id, turn_idx), salt_buckets)`` and ``repartition(N, conv_id, salt)``
   — a conversation with 10^6 turns spreads over ``salt_buckets`` partitions
   instead of hot-spotting one task (north_rule skew requirement). The hash
   is deterministic, so partition contents are reproducible → resumable.
-- **Parse stays in one Arrow stage.** ``parse_udf`` is a pandas UDF over the
-  text column returning a struct; one Python invocation handles a whole
-  Arrow batch of turns (no per-row Python UDFs — input_hint).
-- **Ordering** is applied at the sink with ``repartitionByRange(conv_id,
-  turn_idx) + sortWithinPartitions`` — range partitioning gives global order
-  across output files without a driver-side sort and also splits giant
+- **Ordering** is applied with ``repartitionByRange(conv_id, turn_idx) +
+  sortWithinPartitions`` — range partitioning gives global order across
+  output files without a driver-side sort and also splits giant
   conversations at turn boundaries.
 - Filters on scan columns happen *before* the UDF so Catalyst pushes them to
   parquet/Iceberg (predicate pushdown + column pruning; the UDF only ever
   receives ``text``).
+
+The remaining UDFs serve single-format queries: ``_text_udf`` builds the
+text → text ones, ``standard_udf`` emits the StandardDomTree wire protocol
+through the same router, and ``layout_udf`` the flat layout model
+(``parsers.layout_flat`` keeps its own router: it builds a different output
+model).
 """
 
 from __future__ import annotations
 
+import json
 from typing import Optional
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
-from bella_domify_spark.parsers.dispatch import parse_payload
+from bella_domify_spark.parsers import (csvlike, docxlike, htmllike, markdown,
+                                        pptxlike, xlsxlike)
+from bella_domify_spark.parsers.dispatch import (
+    FMT_EMPTY, FMT_HTML, FMT_PPTX, FMT_TXT, PARSE_RESULT_ARROW, PARSERS,
+    detect_format, parse_batch)
 
-PARSE_RESULT_TYPE = T.StructType([
-    T.StructField("extracted_text", T.StringType()),
-    T.StructField("domtree_json", T.StringType()),
-    T.StructField("fmt", T.StringType()),
-    T.StructField("n_nodes", T.IntegerType()),
-    T.StructField("status", T.StringType()),
-])
+PARSE_RESULT_TYPE = from_arrow_type(PARSE_RESULT_ARROW)
 
 OUTPUT_COLUMNS = ["conv_id", "turn_idx", "role", "tool", "ts",
                   "fmt", "extracted_text", "domtree_json", "n_nodes", "status"]
 
 
-def _make_parse_udf(ocr_provider: "Optional[str]"):
-    """ONE batch-loop body for both the plain and provider-enabled parse
-    UDFs. The provider travels BY NAME (context.image_provider — the
-    parser_context analogue): the string serializes into the plan, each
-    python worker resolves a per-process instance; None resolves to no
-    provider."""
+def _make_parse_udf(ocr_provider: Optional[str]):
+    """Arrow UDF over the text column returning the record struct. The
+    provider name serializes into the plan (see parse_batch)."""
 
-    @F.pandas_udf(PARSE_RESULT_TYPE)
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        from bella_domify_spark.context import image_provider
-
-        prov = image_provider(ocr_provider)
-        records = [parse_payload(t if isinstance(t, str) else None,
-                                 image_provider=prov) for t in texts]
-        return pd.DataFrame.from_records(
-            records, columns=PARSE_RESULT_TYPE.fieldNames())
+    @F.arrow_udf(PARSE_RESULT_TYPE)
+    def udf(texts: pa.Array) -> pa.Array:
+        return parse_batch(texts, ocr_provider)
 
     return udf
 
@@ -71,73 +74,46 @@ def _make_parse_udf(ocr_provider: "Optional[str]"):
 parse_udf = _make_parse_udf(None)
 
 
-def parse_udf_with(ocr_provider: "Optional[str]" = None):
-    """Provider-enabled parse UDF; None returns the shared default."""
-    return parse_udf if ocr_provider is None else _make_parse_udf(ocr_provider)
+def _text_udf(fn):
+    """Arrow UDF applying ``fn(payload) -> str`` per row; null payloads and
+    payloads ``fn`` raises on map to null (per-document error isolation)."""
 
-
-def _safe(fn, default=None):
-    def wrapped(t):
+    def apply(t):
         if not isinstance(t, str):
-            return default
+            return None
         try:
             return fn(t)
         except Exception:  # noqa: BLE001 — per-document error isolation
-            return default
-    return wrapped
+            return None
+
+    @F.arrow_udf(T.StringType())
+    def udf(texts: pa.Array) -> pa.Array:
+        return pa.array([apply(t) for t in texts.to_pylist()], type=pa.string())
+
+    return udf
 
 
-@F.pandas_udf(T.StringType())
-def md_flatten_udf(texts: pd.Series) -> pd.Series:
-    """Markdown tokenizer → tree → reference flatten (flatten-stability
-    surface for canonical markdown)."""
-    from bella_domify_spark.parsers import markdown as mdp
-
-    return texts.map(_safe(lambda t: mdp.parse(t).to_markdown()))
-
-
-@F.pandas_udf(T.StringType())
-def docx_flat_udf(texts: pd.Series) -> pd.Series:
-    """DOCX-like XML walk → reference layout flat text ('；'-joined)."""
-    from bella_domify_spark.parsers import docxlike
-
-    return texts.map(_safe(docxlike.extract_text))
-
-
-@F.pandas_udf(T.StringType())
-def xlsx_flat_udf(texts: pd.Series) -> pd.Series:
-    """Sheet-model payload → reference xlsx layout text with ``Sheet:``
-    headers and tab-joined cells (xlsx_parser.py:20-46)."""
-    from bella_domify_spark.parsers import xlsxlike
-
-    return texts.map(_safe(xlsxlike.layout_text))
-
-
-@F.pandas_udf(T.StringType())
-def pptx_flat_udf(texts: pd.Series) -> pd.Series:
-    """Slide-model payload → reference pptx layout flat text
-    (pptx_parser.py:22-67 + '；'-joined blocks)."""
-    from bella_domify_spark.parsers import pptxlike
-
-    return texts.map(_safe(pptxlike.flat_text))
-
-
-@F.pandas_udf(T.StringType())
-def html_extract_udf(texts: pd.Series) -> pd.Series:
-    """HTML page → boilerplate strip + DOM heuristics → main-content
-    markdown (htmllike.py; engine extension per the north star)."""
-    from bella_domify_spark.parsers import htmllike
-
-    return texts.map(_safe(htmllike.extract_text))
-
-
-@F.pandas_udf(T.StringType())
-def xlsx_markdown_udf(texts: pd.Series) -> pd.Series:
-    """Sheet-model payload → Excel domtree → markdown (one HTML table per
-    sheet, excel/converter.py:85-186 + domtree.py:339-350)."""
-    from bella_domify_spark.parsers import xlsxlike
-
-    return texts.map(_safe(xlsxlike.extract_text))
+#: markdown tokenizer → tree → reference flatten (flatten-stability
+#: surface for canonical markdown)
+md_flatten_udf = _text_udf(lambda t: markdown.parse(t).to_markdown())
+#: DOCX-like XML walk → reference layout flat text ('；'-joined)
+docx_flat_udf = _text_udf(docxlike.extract_text)
+#: sheet-model payload → reference xlsx layout text with ``Sheet:`` headers
+#: and tab-joined cells (xlsx_parser.py:20-46)
+xlsx_flat_udf = _text_udf(xlsxlike.layout_text)
+#: slide-model payload → reference pptx layout flat text
+#: (pptx_parser.py:22-67 + '；'-joined blocks)
+pptx_flat_udf = _text_udf(pptxlike.flat_text)
+#: HTML page → boilerplate strip + DOM heuristics → main-content markdown
+#: (htmllike.py; engine extension per the north star)
+html_extract_udf = _text_udf(htmllike.extract_text)
+#: sheet-model payload → Excel domtree → markdown (one HTML table per
+#: sheet, excel/converter.py:85-186 + domtree.py:339-350)
+xlsx_markdown_udf = _text_udf(xlsxlike.extract_text)
+#: CSV layout normalization (csv_parser.py:19-40 semantics)
+csv_normalize_udf = _text_udf(csvlike.normalize_text)
+#: CSV → GFM pipe table (csv_parser.py:43-64 semantics)
+csv_markdown_udf = _text_udf(csvlike.to_markdown_table)
 
 
 STANDARD_RESULT_TYPE = T.StructType([
@@ -145,17 +121,17 @@ STANDARD_RESULT_TYPE = T.StructType([
     T.StructField("tokens", T.IntegerType()),
 ])
 
+# the StandardDomTree of html and pptx payloads is built from the txt
+# converter's tree, as the reference sends .html through it
+# (parse_manager.py:90-95)
+_STANDARD_PARSERS = {**PARSERS, FMT_HTML: PARSERS[FMT_TXT],
+                     FMT_PPTX: PARSERS[FMT_TXT]}
+
 
 @F.pandas_udf(STANDARD_RESULT_TYPE)
 def standard_udf(texts: pd.Series) -> pd.DataFrame:
     """StandardDomTree wire protocol per payload (format-dispatched)."""
     from bella_domify_spark.core.standard import to_standard
-    from bella_domify_spark.parsers import docxlike, markdown, txt, xlsxlike
-    from bella_domify_spark.parsers.dispatch import (
-        FMT_DOCX, FMT_EMPTY, FMT_MD, FMT_PDF, FMT_XLSX, detect_format)
-    from bella_domify_spark.parsers.pdflike import pipeline as pdfpipe
-
-    import json as _json
 
     out = []
     for t in texts:
@@ -165,19 +141,9 @@ def standard_udf(texts: pd.Series) -> pd.DataFrame:
             out.append({"standard_json": None, "tokens": 0})
             continue
         try:
-            if fmt == FMT_PDF:
-                tree = pdfpipe.parse(t)
-            elif fmt == FMT_DOCX:
-                tree = docxlike.parse(t)
-            elif fmt == FMT_XLSX:
-                tree = xlsxlike.build_domtree(t)
-            elif fmt == FMT_MD:
-                tree = markdown.parse(t)
-            else:
-                tree = txt.parse(t)
-            std = to_standard(tree)
-            out.append({"standard_json": _json.dumps(std, ensure_ascii=False,
-                                                     separators=(",", ":")),
+            std = to_standard(_STANDARD_PARSERS[fmt](t, None)[0])
+            out.append({"standard_json": json.dumps(std, ensure_ascii=False,
+                                                    separators=(",", ":")),
                         "tokens": std["root"]["tokens"]})
         except Exception:  # noqa: BLE001
             out.append({"standard_json": None, "tokens": 0})
@@ -201,25 +167,7 @@ def layout_udf(texts: pd.Series) -> pd.DataFrame:
 
 
 @F.pandas_udf(T.StringType())
-def csv_normalize_udf(texts: pd.Series) -> pd.Series:
-    """CSV layout normalization (csv_parser.py:19-40 semantics)."""
-    from bella_domify_spark.parsers import csvlike
-
-    return texts.map(_safe(csvlike.normalize_text))
-
-
-@F.pandas_udf(T.StringType())
-def csv_markdown_udf(texts: pd.Series) -> pd.Series:
-    """CSV → GFM pipe table (csv_parser.py:43-64 semantics)."""
-    from bella_domify_spark.parsers import csvlike
-
-    return texts.map(_safe(csvlike.to_markdown_table))
-
-
-@F.pandas_udf(T.StringType())
 def detect_format_udf(texts: pd.Series) -> pd.Series:
-    from bella_domify_spark.parsers.dispatch import detect_format
-
     return texts.map(lambda t: detect_format(t if isinstance(t, str) else None))
 
 
@@ -231,23 +179,14 @@ def with_salt(df: DataFrame, salt_buckets: int = 8) -> DataFrame:
     )
 
 
-def apply_parse(df: DataFrame, keep: tuple = (),
-                ocr_provider: Optional[str] = None) -> DataFrame:
-    """Apply the Arrow-batched parse UDF and flatten the result struct.
-    ``keep``: extra passthrough columns (e.g. the bucket id for the sink);
-    ``ocr_provider``: registry name (context.py) for the image seam."""
-    parsed = df.withColumn("_p", parse_udf_with(ocr_provider)(F.col("text")))
-    cols = ["conv_id", "turn_idx", "role", "tool", "ts"]
-    out = parsed.select(
-        *cols,
-        F.col("_p.fmt").alias("fmt"),
-        F.col("_p.extracted_text").alias("extracted_text"),
-        F.col("_p.domtree_json").alias("domtree_json"),
-        F.col("_p.n_nodes").alias("n_nodes"),
-        F.col("_p.status").alias("status"),
-        *[F.col(k) for k in keep],
-    )
-    return out
+def apply_parse(df: DataFrame, ocr_provider: Optional[str] = None) -> DataFrame:
+    """Apply the Arrow-batched parse UDF and project the result struct
+    into ``OUTPUT_COLUMNS``; ``ocr_provider``: registry name (context.py)
+    for the image seam."""
+    parsed = df.withColumn("_p", _make_parse_udf(ocr_provider)(F.col("text")))
+    fields = PARSE_RESULT_TYPE.fieldNames()
+    return parsed.select(*[F.col(f"_p.{c}").alias(c) if c in fields else c
+                           for c in OUTPUT_COLUMNS])
 
 
 def extract_transcripts(df: DataFrame,
@@ -276,15 +215,7 @@ def extract_transcripts(df: DataFrame,
             df = df.repartition("conv_id", "salt")
         df = df.drop("salt")
 
-    parsed = df.withColumn("_p", parse_udf_with(ocr_provider)(F.col("text")))
-    out = parsed.select(
-        "conv_id", "turn_idx", "role", "tool", "ts",
-        F.col("_p.fmt").alias("fmt"),
-        F.col("_p.extracted_text").alias("extracted_text"),
-        F.col("_p.domtree_json").alias("domtree_json"),
-        F.col("_p.n_nodes").alias("n_nodes"),
-        F.col("_p.status").alias("status"),
-    )
+    out = apply_parse(df, ocr_provider)
     if ordered:
         out = (out.repartitionByRange(partitions or 32, "conv_id", "turn_idx")
                   .sortWithinPartitions("conv_id", "turn_idx"))

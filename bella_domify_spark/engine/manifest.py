@@ -239,10 +239,6 @@ class BucketStore:
         return os.path.getsize(p)
 
 
-def _manifest_dir(out_dir: str) -> str:  # kept for callers/tests
-    return os.path.join(out_dir, "_manifests")
-
-
 def completed_buckets(out_dir: str) -> set:
     store = BucketStore(out_dir)
     # parse the FULL id: names are bucket-%05d.json, but %05d widens past
@@ -322,18 +318,17 @@ def with_bucket(df: DataFrame, n_buckets: int,
 
 def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
                   partitions: Optional[int] = None, run_id: str = "run",
-                  fused: bool = True,
                   ocr_provider: Optional[str] = None,
                   bucket_expr=None) -> dict:
     """Full resumable extraction: bucket → resume-filter → shuffle → parse →
     per-bucket atomic sink. ``df`` is the raw transcript table; ``out_dir``
     is a local path or a pyarrow-compatible URI.
 
-    fused=True (default) parses INSIDE the sink's Arrow stage: one Python
-    worker set and one JVM↔Python crossing for the fat result columns,
-    instead of parse-worker → JVM → sink-worker. Identical output; ~1.5-2×
-    pipeline throughput at high core counts. fused=False keeps the two-stage
-    plan (useful when a pre-parsed DataFrame is reused elsewhere).
+    The parse runs INSIDE the sink's Arrow stage (``parse_batch``, the
+    same body as ``extract.parse_udf``): one Python worker set and one
+    JVM↔Python crossing, instead of parse-worker → JVM → sink-worker for
+    the fat result columns. Bucket files carry ``extract.OUTPUT_COLUMNS``
+    (the input's ``role``/``tool``/``ts`` only when present).
 
     One driver per ``out_dir`` at a time: the resume set is read once at
     start and orphaned attempt-temps are swept then (safe because no task
@@ -345,7 +340,9 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
     Returns {buckets_total, buckets_done_before, buckets_written, rows,
     bytes, wall_ms}.
     """
-    from bella_domify_spark.engine.extract import apply_parse
+    # imported here, not in the sink: the Python workers never import
+    # engine.extract
+    from bella_domify_spark.engine.extract import OUTPUT_COLUMNS
 
     _store = BucketStore(out_dir)
     _store.makedirs()
@@ -370,46 +367,26 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
 
     p = partitions or df.sparkSession.sparkContext.defaultParallelism
     df = df.repartition(min(p, n_buckets), "pid").sortWithinPartitions("pid")
-    parsed = df if fused else apply_parse(df, keep=("pid",),
-                                          ocr_provider=ocr_provider)
 
     def sink(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:  # noqa: F821
         import time
 
         import pyarrow as pa
 
+        from bella_domify_spark.parsers.dispatch import parse_batch
+
         store = BucketStore(out_dir)
         out_schema = pa.schema([("bucket", pa.int32()), ("rows", pa.int64()),
                                 ("bytes", pa.int64()), ("wall_ms", pa.float64())])
 
-        def maybe_parse(batch: "pa.RecordBatch") -> "pa.RecordBatch":
-            """Fused mode: raw transcript batch → parsed batch (same columns
-            the two-stage plan produces)."""
-            if "extracted_text" in batch.schema.names:
-                return batch  # already parsed upstream (fused=False)
-            from bella_domify_spark.context import image_provider
-            from bella_domify_spark.parsers.dispatch import parse_payload
-
-            prov = image_provider(ocr_provider)
-            texts = batch.column("text").to_pylist()
-            recs = [parse_payload(t if isinstance(t, str) else None,
-                                  image_provider=prov)
-                    for t in texts]
-            cols, names = [], []
-            for name in ("conv_id", "turn_idx", "role", "tool", "ts"):
-                if name in batch.schema.names:
-                    cols.append(batch.column(name))
-                    names.append(name)
-            for fname, patype in (("fmt", pa.string()),
-                                  ("extracted_text", pa.string()),
-                                  ("domtree_json", pa.string()),
-                                  ("n_nodes", pa.int32()),
-                                  ("status", pa.string())):
-                cols.append(pa.array([r[fname] for r in recs], type=patype))
-                names.append(fname)
-            cols.append(batch.column("pid"))
-            names.append("pid")
-            return pa.RecordBatch.from_arrays(cols, names=names)
+        def parse(batch: "pa.RecordBatch") -> "pa.RecordBatch":
+            """Raw transcript batch → bucket-file columns + pid."""
+            parsed = parse_batch(batch.column("text"), ocr_provider)
+            cols = {**{n: batch.column(n) for n in batch.schema.names},
+                    **{f.name: parsed.field(f.name) for f in parsed.type}}
+            names = [n for n in OUTPUT_COLUMNS if n in cols] + ["pid"]
+            return pa.RecordBatch.from_arrays([cols[n] for n in names],
+                                              names=names)
 
         cur_pid, writer, commit, rows, t0 = None, None, None, 0, 0.0
         results = []
@@ -434,7 +411,7 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
             writer, rows = None, 0
 
         for batch in batches:
-            batch = maybe_parse(batch)
+            batch = parse(batch)
             pids = batch.column("pid").to_pylist()
             data = batch.drop_columns(["pid"])
             # split the batch at pid boundaries (rows are pid-sorted)
@@ -454,7 +431,7 @@ def run_resumable(df: DataFrame, out_dir: str, n_buckets: int = 64,
         close_current()
         yield pa.RecordBatch.from_pylist(results, schema=out_schema)
 
-    summaries = parsed.mapInArrow(sink, _SUMMARY_TYPE).collect()
+    summaries = df.mapInArrow(sink, _SUMMARY_TYPE).collect()
     return {
         "buckets_total": n_buckets,
         "buckets_done_before": len(done),

@@ -18,8 +18,9 @@ Equality semantics per format:
 - docx-like  → XML walk tree; text via the layout semantics
 - pdf-like   → full layout pipeline; text = tree markdown flatten
 
-``parse_payload`` is a pure function str → dict; the Spark engine maps it
-over Arrow batches (no per-row Python UDFs).
+``PARSERS`` is the one format router; ``parse_payload`` is a pure function
+str → dict over it, and ``parse_batch`` maps it over an Arrow batch — the
+whole Python body of every extraction crossing (no per-row Python UDFs).
 """
 
 from __future__ import annotations
@@ -27,7 +28,11 @@ from __future__ import annotations
 import re
 from typing import Optional
 
-from bella_domify_spark.parsers import csvlike, docxlike, markdown, txt, xlsxlike
+import pyarrow as pa
+
+from bella_domify_spark import context
+from bella_domify_spark.parsers import (csvlike, docxlike, htmllike, markdown,
+                                        pptxlike, txt, xlsxlike)
 from bella_domify_spark.parsers.pdflike import pipeline as pdfpipe
 
 FMT_PDF = "pdflike"
@@ -64,48 +69,49 @@ def detect_format(text: Optional[str]) -> str:
     return FMT_TXT
 
 
-def parse_payload(text: Optional[str], image_provider=None) -> dict:
-    """Parse one turn payload → extraction record. Never raises: errors are
-    reported in the ``status`` column (per-page error isolation analogue,
-    reference pdf/converter.py:160-166). ``image_provider`` (a
-    providers.ImageStorageProvider) enables the Figure link/OCR path for
-    pdf-format payloads — None keeps placeholders, like the reference with
-    no parser_context provider bound."""
-    fmt = detect_format(text)
-    if fmt == FMT_EMPTY:
-        return {"extracted_text": "", "domtree_json": None, "fmt": fmt,
-                "n_nodes": 0, "status": "skipped_empty"}
+def _with_markdown(tree) -> tuple:
+    return tree, tree.to_markdown()
+
+
+def _pptx(text: str, image_provider) -> tuple:
+    # layout-only format in the reference (no pptx domtree converter
+    # exists); extracted text = the layout flat text, tree = one node
+    # carrying it
+    extracted = pptxlike.flat_text(text)
+    return txt.parse(extracted), extracted
+
+
+def _markdown(text: str, image_provider) -> tuple:
+    # equality target: txt semantics; tree: block tokenizer
+    extracted = txt.extract_text(text)
+    return markdown.parse(text), extracted
+
+
+#: The one format router: fmt -> fn(text, image_provider) -> (DomTree,
+#: extracted_text). ``image_provider`` (a providers.ImageStorageProvider)
+#: enables the Figure link/OCR path for pdf-format payloads — None keeps
+#: placeholders, like the reference with no parser_context provider bound.
+#: htmllike is an ENGINE EXTENSION: the reference routes .html through its
+#: txt converter (parse_manager.py:90-95); the north star asks for true
+#: boilerplate strip + DOM heuristics — see htmllike.py.
+PARSERS = {
+    FMT_PDF: lambda t, p: _with_markdown(pdfpipe.parse(t, image_provider=p)),
+    FMT_XLSX: lambda t, p: _with_markdown(xlsxlike.build_domtree(t)),
+    FMT_PPTX: _pptx,
+    FMT_DOCX: lambda t, p: _with_markdown(docxlike.parse(t)),
+    FMT_HTML: lambda t, p: _with_markdown(htmllike.parse(t)),
+    FMT_MD: _markdown,
+    FMT_TXT: lambda t, p: _with_markdown(txt.parse(t)),
+}
+
+
+def parse_record(fmt: str, parse, text: str, image_provider=None) -> dict:
+    """Run one ``parse(text, image_provider) -> (tree, extracted_text)``
+    into an extraction record. Never raises: errors are reported in the
+    ``status`` column (per-page error isolation analogue, reference
+    pdf/converter.py:160-166)."""
     try:
-        if fmt == FMT_PDF:
-            tree = pdfpipe.parse(text, image_provider=image_provider)
-            extracted = tree.to_markdown()
-        elif fmt == FMT_XLSX:
-            tree = xlsxlike.build_domtree(text)
-            extracted = tree.to_markdown()
-        elif fmt == FMT_PPTX:
-            # layout-only format in the reference (no pptx domtree
-            # converter exists); extracted text = the layout flat text,
-            # tree = one node carrying it
-            from bella_domify_spark.parsers import pptxlike
-            extracted = pptxlike.flat_text(text)
-            tree = txt.parse(extracted)
-        elif fmt == FMT_DOCX:
-            tree = docxlike.parse(text)
-            extracted = tree.to_markdown()
-        elif fmt == FMT_HTML:
-            # ENGINE EXTENSION: the reference routes .html through its txt
-            # converter (parse_manager.py:90-95); the north star asks for
-            # true boilerplate strip + DOM heuristics — see htmllike.py
-            from bella_domify_spark.parsers import htmllike
-            tree = htmllike.parse(text)
-            extracted = tree.to_markdown()
-        elif fmt == FMT_MD:
-            # equality target: txt semantics; tree: block tokenizer
-            extracted = txt.extract_text(text)
-            tree = markdown.parse(text)
-        else:
-            tree = txt.parse(text)
-            extracted = tree.to_markdown()
+        tree, extracted = parse(text, image_provider)
         dom_json = tree.to_json()
         n_nodes = dom_json.count('"element":{') if dom_json else 0
         return {"extracted_text": extracted, "domtree_json": dom_json,
@@ -115,9 +121,41 @@ def parse_payload(text: Optional[str], image_provider=None) -> dict:
                 "n_nodes": 0, "status": f"error:{type(e).__name__}:{e}"[:200]}
 
 
+def parse_payload(text: Optional[str], image_provider=None) -> dict:
+    """Parse one turn payload → extraction record (never raises)."""
+    fmt = detect_format(text)
+    if fmt == FMT_EMPTY:
+        return {"extracted_text": "", "domtree_json": None, "fmt": fmt,
+                "n_nodes": 0, "status": "skipped_empty"}
+    return parse_record(fmt, PARSERS[fmt], text, image_provider)
+
+
+#: Arrow type of an extraction record (engine.extract.PARSE_RESULT_TYPE is
+#: derived from it)
+PARSE_RESULT_ARROW = pa.struct([
+    ("extracted_text", pa.string()),
+    ("domtree_json", pa.string()),
+    ("fmt", pa.string()),
+    ("n_nodes", pa.int32()),
+    ("status", pa.string()),
+])
+
+
+def parse_batch(texts: pa.Array,
+                ocr_provider: Optional[str] = None) -> pa.StructArray:
+    """The one Arrow batch-parse body, shared by the parse UDF and the
+    fused sink: one extraction record per turn of the batch. The provider
+    travels BY NAME (context.image_provider — the parser_context analogue)
+    and resolves to a per-process instance; None means no provider."""
+    prov = context.image_provider(ocr_provider)
+    return pa.array([parse_payload(t if isinstance(t, str) else None, prov)
+                     for t in texts.to_pylist()], type=PARSE_RESULT_ARROW)
+
+
 __all__ = [
     "detect_format",
     "parse_payload",
+    "parse_batch",
     "csvlike",
     "FMT_PDF", "FMT_DOCX", "FMT_MD", "FMT_TXT", "FMT_XLSX", "FMT_PPTX",
     "FMT_EMPTY",

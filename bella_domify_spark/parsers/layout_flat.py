@@ -26,7 +26,7 @@ from typing import List, Optional
 
 from bella_domify_spark.functions.textutils import remove_number
 from bella_domify_spark.parsers.pdflike.glyphdoc import _image_meta
-from bella_domify_spark.parsers import csvlike, docxlike
+from bella_domify_spark.parsers import docxlike
 from bella_domify_spark.parsers.dispatch import (
     FMT_DOCX,
     FMT_EMPTY,
@@ -189,10 +189,6 @@ def _layout_parse_raw(payload: Optional[str]) -> List[SimpleBlock]:
                 for k, t in pptxlike.layout_blocks(payload)]
     # txt & markdown: whole payload = one TEXT block (txt_parser.py:17-25)
     return [SimpleBlock(type=TEXT, text=payload)]
-
-
-def csv_layout(payload: str) -> List[SimpleBlock]:
-    return [SimpleBlock(type=TEXT, text=csvlike.normalize_text(payload))]
 
 
 def flat_text(blocks: List[SimpleBlock]) -> str:

@@ -38,14 +38,17 @@ def gate_payload(doc_id: int) -> str:
     return gen_pdflike(_Rng(GATE_SEED + int(doc_id)))
 
 
+def _gate_row(doc_id: int, rec: dict) -> dict:
+    return {"doc_id": int(doc_id), "extracted_text": rec["extracted_text"],
+            "domtree_json": rec["domtree_json"],
+            "n_nodes": rec["n_nodes"], "status": rec["status"]}
+
+
 def gate_record(doc_id: int) -> dict:
     """Payload -> parse record (pure; used by Spark and the oracle tool)."""
     from bella_domify_spark.parsers.dispatch import parse_payload
 
-    rec = parse_payload(gate_payload(doc_id))
-    return {"doc_id": int(doc_id), "extracted_text": rec["extracted_text"],
-            "domtree_json": rec["domtree_json"],
-            "n_nodes": rec["n_nodes"], "status": rec["status"]}
+    return _gate_row(doc_id, parse_payload(gate_payload(doc_id)))
 
 
 STREAM_SEED = 91_000_003  # doc_id -> stream-scenario seed offset (pinned)
@@ -65,21 +68,17 @@ def gate_record_stream(doc_id: int) -> dict:
     ``parse_stream_table=True`` (reference flag
     services/parse_manager.py:572-578) — makes P16 (tables.py
     parse_stream_tables + merged stream cells) oracle-visible instead of
-    pytest-only. Error wrapping mirrors dispatch.parse_payload."""
+    pytest-only. The record (node count, error status) is built by the
+    same dispatch.parse_record as every turn's."""
+    from bella_domify_spark.parsers.dispatch import FMT_PDF, parse_record
     from bella_domify_spark.parsers.pdflike import pipeline as pdfpipe
 
-    payload = gate_payload_stream(doc_id)
-    try:
-        tree = pdfpipe.parse(payload, parse_stream_table=True)
-        extracted = tree.to_markdown()
-        dom_json = tree.to_json()
-        n_nodes = dom_json.count('"element":{') if dom_json else 0
-        return {"doc_id": int(doc_id), "extracted_text": extracted,
-                "domtree_json": dom_json, "n_nodes": n_nodes, "status": "ok"}
-    except Exception as e:  # noqa: BLE001 — never fail the job for one doc
-        return {"doc_id": int(doc_id), "extracted_text": "",
-                "domtree_json": None, "n_nodes": 0,
-                "status": f"error:{type(e).__name__}:{e}"[:200]}
+    def parse(text: str, _image_provider) -> tuple:
+        tree = pdfpipe.parse(text, parse_stream_table=True)
+        return tree, tree.to_markdown()
+
+    return _gate_row(doc_id, parse_record(FMT_PDF, parse,
+                                          gate_payload_stream(doc_id)))
 
 
 OCR_SCHEMA = ("doc_id bigint, extracted_text string, layout_text string, "

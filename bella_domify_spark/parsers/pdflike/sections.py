@@ -158,13 +158,6 @@ def calculate_margin(page) -> Tuple[float, float, float, float]:
             min(ITP, round(top, 1)), min(ITP, round(bottom, 1)))
 
 
-def detect_two_column_pos(elements: Sequence) -> set:
-    """All observed two-column divide positions: (round(left column right
-    edge), round(right column left edge)) — RawPage.py:285-296."""
-    return _detect_two_column_pos([(r, group_by_columns(r))
-                                   for r in group_by_rows(elements)])
-
-
 def _detect_two_column_pos(rows_cols: List[tuple]) -> set:
     out = set()
     for _row, cols in rows_cols:

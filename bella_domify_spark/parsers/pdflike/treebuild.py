@@ -19,7 +19,6 @@ from typing import List, Optional
 
 from bella_domify_spark.core.blocks import TableBlock, TextBlock
 from bella_domify_spark.core.tree import DomTree, Node
-from bella_domify_spark.functions.textutils import SENTENCE_END_PUNC
 
 TABLE_CAPTION_PATTERN = re.compile(r'^\s*(表|图表|table|Table|tab|Tab)\s*[0-9|-]+')
 FIGURE_CAPTION_PATTERN = re.compile(r'^\s*(图|Figure|figure|Fig|fig)\s*[0-9|-]+')
@@ -193,8 +192,3 @@ def _is_header_footer(block) -> bool:
     if isinstance(block, TextBlock):
         return any(l.is_header or l.is_footer for l in block.lines)
     return False
-
-
-def end_of_paragraph(text: str) -> bool:
-    """Sentence-end heuristic used when stamping paragraph flags."""
-    return bool(text) and text.rstrip()[-1:] in SENTENCE_END_PUNC

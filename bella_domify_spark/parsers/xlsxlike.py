@@ -119,8 +119,3 @@ def build_domtree(payload: str) -> DomTree:
 
 def extract_text(payload: str) -> str:
     return build_domtree(payload).to_markdown()
-
-
-def count_nodes(payload: str) -> int:
-    doc = fastjson.loads(payload)
-    return len(doc.get("sheets", []))

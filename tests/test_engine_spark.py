@@ -39,6 +39,27 @@ class TestEndToEnd:
         mism = j.filter(F.col("extracted_text") != F.col("exp_text")).count()
         assert mism == 0
 
+        # the fused sink and the public extract_transcripts path write the
+        # same columns, in the same order, with the same types and values
+        from bella_domify_spark.engine.extract import extract_transcripts
+
+        two_stage = extract_transcripts(df, partitions=4)
+        assert ([(f.name, f.dataType) for f in got.schema]
+                == [(f.name, f.dataType) for f in two_stage.schema])
+        assert got.columns == ["conv_id", "turn_idx", "role", "tool", "ts",
+                               "fmt", "extracted_text", "domtree_json",
+                               "n_nodes", "status"]
+        assert got.schema["n_nodes"].dataType.simpleString() == "int"
+        cols = ("fmt", "domtree_json", "n_nodes", "status")
+        pair = got.alias("a").join(two_stage.alias("b"),
+                                   ["conv_id", "turn_idx"])
+        assert pair.count() == df.count()
+        differs = [~F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}")) for c in cols]
+        cond = differs[0]
+        for d in differs[1:]:
+            cond = cond | d
+        assert pair.filter(cond).count() == 0
+
     def test_resume_skips_completed(self, spark, corpus, tmp_path):
         from bella_domify_spark.engine.manifest import (
             completed_buckets,
