@@ -729,8 +729,12 @@ def _q_dedup_cluster_minhash(spark, sf):
     # minhash-LSH banded candidate graph at est_jaccard >= 0.2
     from bella_domify_spark.ops.dedup import minhash_lsh_pairs
     from bella_domify_spark.ops.graph import connected_components
-    pairs = minhash_lsh_pairs(_t(spark, sf, "documents"), threshold=0.2)
-    return connected_components(pairs, node_out="doc_id")
+    from bella_domify_spark.ops.pins import Pins
+    # the materialized components no longer read the pair checkpoint
+    with Pins() as p:
+        pairs = p.own(minhash_lsh_pairs(_t(spark, sf, "documents"),
+                                        threshold=0.2))
+        return connected_components(pairs, node_out="doc_id")
 
 
 def _q_dedup_cluster_simhash(spark, sf):
@@ -740,9 +744,12 @@ def _q_dedup_cluster_simhash(spark, sf):
     # (dedup_cluster_canonical covers label_prop)
     from bella_domify_spark.ops.dedup import simhash_near_dups
     from bella_domify_spark.ops.graph import connected_components
-    pairs = simhash_near_dups(_t(spark, sf, "documents"), max_hamming=3)
-    return connected_components(pairs, node_out="doc_id",
-                                algorithm="two_star")
+    from bella_domify_spark.ops.pins import Pins
+    with Pins() as p:
+        pairs = p.own(simhash_near_dups(_t(spark, sf, "documents"),
+                                        max_hamming=3))
+        return connected_components(pairs, node_out="doc_id",
+                                    algorithm="two_star")
 
 
 def _q_curate_corpus(spark, sf):
@@ -1111,6 +1118,7 @@ def _q_manifest_stats(spark, sf):
 
     from bella_domify_spark.engine.manifest import run_resumable
     from bella_domify_spark.ops.dedup import _md5_int60
+    from bella_domify_spark.ops.pins import materialize
 
     t = _t(spark, sf, "documents").select(
         F.col("doc_id").cast("string").alias("conv_id"),
@@ -1130,7 +1138,7 @@ def _q_manifest_stats(spark, sf):
     m = (spark.read.json(f"{out}/_manifests/bucket-*.json")
          .select(F.col("bucket").cast("long").alias("bucket"),
                  F.col("rows").cast("long").alias("n_rows"))
-         .localCheckpoint(eager=True))
+         .transform(materialize))
     shutil.rmtree(out, ignore_errors=True)
     tot = m.agg(F.sum("n_rows").cast("long").alias("tot"),
                 F.max("n_rows").alias("mx"),

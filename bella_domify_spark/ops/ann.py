@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from bella_domify_spark.ops.dedup import _widen
+from bella_domify_spark.ops.pins import Pins, materialize
 
 
 def _dot(a, b):
@@ -73,35 +74,35 @@ def train_centroids(vectors: DataFrame, n_centroids: int = 8, iters: int = 4,
                          F.col(vec_col).cast("array<double>").alias("_v"))
     if sample_fraction is not None:
         src = src.sample(fraction=sample_fraction, seed=7)
-    src = _widen(src).cache()
-    seed_pd = src.orderBy(F.asc("_id")).limit(n_centroids).select("_v").toPandas()
-    mat = np.array(seed_pd["_v"].tolist(), dtype="float64")
-    spark = vectors.sparkSession
-    for _ in range(iters):
-        bc = spark.createDataFrame(
-            [(int(i), [float(x) for x in mat[i]]) for i in range(len(mat))],
-            "c_id int, c_vec array<double>")
-        j = src.crossJoin(F.broadcast(bc))
-        scored = j.select(
-            "_id", "_v", "c_id",
-            (_dot(F.col("_v"), F.col("c_vec")) /
-             (_norm(F.col("_v")) * _norm(F.col("c_vec")))).alias("s"))
-        w = Window.partitionBy("_id").orderBy(F.desc("s"), F.asc("c_id"))
-        assigned = (scored.withColumn("r", F.row_number().over(w))
-                    .filter(F.col("r") == 1).select("c_id", "_v"))
-        # per-list elementwise mean: posexplode → (c_id, pos) avg → re-pack.
-        # Rows fan out ×dim but each is (int,int,double) — the narrow shape
-        # shuffles far less than the fat vectors would.
-        means = (assigned.select("c_id", F.posexplode("_v").alias("pos", "x"))
-                 .groupBy("c_id", "pos").agg(F.avg("x").alias("m"))
-                 .groupBy("c_id")
-                 .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
-                      .alias("pm"))
-                 .select("c_id", F.transform("pm", lambda s: s["m"])
-                         .alias("c_vec")))
-        for row in means.collect():  # n_centroids rows — driver-tiny
-            mat[row["c_id"]] = np.array(row["c_vec"], dtype="float64")
-    src.unpersist()
+    with Pins() as p:
+        src = p.pin(_widen(src))
+        seed_pd = src.orderBy(F.asc("_id")).limit(n_centroids).select("_v").toPandas()
+        mat = np.array(seed_pd["_v"].tolist(), dtype="float64")
+        spark = vectors.sparkSession
+        for _ in range(iters):
+            bc = spark.createDataFrame(
+                [(int(i), [float(x) for x in mat[i]]) for i in range(len(mat))],
+                "c_id int, c_vec array<double>")
+            j = src.crossJoin(F.broadcast(bc))
+            scored = j.select(
+                "_id", "_v", "c_id",
+                (_dot(F.col("_v"), F.col("c_vec")) /
+                 (_norm(F.col("_v")) * _norm(F.col("c_vec")))).alias("s"))
+            w = Window.partitionBy("_id").orderBy(F.desc("s"), F.asc("c_id"))
+            assigned = (scored.withColumn("r", F.row_number().over(w))
+                        .filter(F.col("r") == 1).select("c_id", "_v"))
+            # per-list elementwise mean: posexplode → (c_id, pos) avg → re-pack.
+            # Rows fan out ×dim but each is (int,int,double) — the narrow shape
+            # shuffles far less than the fat vectors would.
+            means = (assigned.select("c_id", F.posexplode("_v").alias("pos", "x"))
+                     .groupBy("c_id", "pos").agg(F.avg("x").alias("m"))
+                     .groupBy("c_id")
+                     .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
+                          .alias("pm"))
+                     .select("c_id", F.transform("pm", lambda s: s["m"])
+                             .alias("c_vec")))
+            for row in means.collect():  # n_centroids rows — driver-tiny
+                mat[row["c_id"]] = np.array(row["c_vec"], dtype="float64")
     return spark.createDataFrame(
         [(int(i), [float(x) for x in mat[i]]) for i in range(len(mat))],
         "c_id int, c_vec array<double>")
@@ -150,14 +151,6 @@ def kmeans_assign(vectors: DataFrame, n_clusters: int = 8, iters: int = 2,
     # cluster_label_mi 7.6 → 3.0 s. Arithmetic is unchanged (same
     # zip_with integer squared-L2, same tie-break), so the output is
     # bit-identical to the former plan and the oracle.
-    # pin the quantized vectors for the loop's iters+1 passes (seed +
-    # one means job per iteration); released before returning, so the
-    # consumer's final plan recomputes the narrow scan+quantize once
-    q = q.persist()
-    seed_rows = sorted(q.orderBy("id").limit(n_clusters).collect(),
-                       key=lambda r: r["id"])
-    cents = [list(r["v"]) for r in seed_rows]
-
     def assigned():
         """(id, v, mn=(d: dist2, c: c_id)) under the current literal
         centroids. The whole argmin is ONE fixed-shape expression:
@@ -182,22 +175,29 @@ def kmeans_assign(vectors: DataFrame, n_clusters: int = 8, iters: int = 2,
             i.alias("c"))))
         return q.select("id", "v", mn.alias("mn"))
 
-    for _ in range(iters):
-        means = (assigned()
-                 .select(F.col("mn.c").alias("c_id"),
-                         F.posexplode("v").alias("pos", "x"))
-                 .groupBy("c_id", "pos")
-                 .agg(F.expr("sum(x) div count(1)").alias("m"))
-                 .groupBy("c_id")
-                 .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
-                      .alias("pm"))
-                 .select("c_id",
-                         F.transform("pm", lambda s: s["m"]).alias("cnew"))
-                 .collect())  # k rows of k·dim ints — driver-tiny
-        new = {r["c_id"]: list(r["cnew"]) for r in means}
-        # empty clusters keep their previous centroid (standard Lloyd)
-        cents = [new.get(i, cents[i]) for i in range(len(cents))]
-    q.unpersist()
+    # pin the quantized vectors for the loop's iters+1 passes (seed +
+    # one means job per iteration); released before returning, so the
+    # consumer's final plan recomputes the narrow scan+quantize once
+    with Pins() as p:
+        q = p.pin(q)
+        seed_rows = sorted(q.orderBy("id").limit(n_clusters).collect(),
+                           key=lambda r: r["id"])
+        cents = [list(r["v"]) for r in seed_rows]
+        for _ in range(iters):
+            means = (assigned()
+                     .select(F.col("mn.c").alias("c_id"),
+                             F.posexplode("v").alias("pos", "x"))
+                     .groupBy("c_id", "pos")
+                     .agg(F.expr("sum(x) div count(1)").alias("m"))
+                     .groupBy("c_id")
+                     .agg(F.array_sort(F.collect_list(F.struct("pos", "m")))
+                          .alias("pm"))
+                     .select("c_id",
+                             F.transform("pm", lambda s: s["m"]).alias("cnew"))
+                     .collect())  # k rows of k·dim ints — driver-tiny
+            new = {r["c_id"]: list(r["cnew"]) for r in means}
+            # empty clusters keep their previous centroid (standard Lloyd)
+            cents = [new.get(i, cents[i]) for i in range(len(cents))]
     return (assigned()
             .select(F.col("id").alias(id_col),
                     F.col("mn.c").cast("long").alias("cluster_id"),
@@ -536,7 +536,7 @@ def semdedup_prune(vectors: DataFrame, n_clusters: int = 8, iters: int = 2,
     assign = (kmeans_assign(vectors, n_clusters=n_clusters, iters=iters,
                             id_col=id_col, vec_col=vec_col, scale=scale)
               .select(F.col(id_col).alias("id"), "cluster_id")
-              .localCheckpoint(eager=True))
+              .transform(materialize))
     q = vectors.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col).cast("array<double>"),

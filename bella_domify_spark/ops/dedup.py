@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from bella_domify_spark.ops.hashfamily import MERSENNE_P, minhash_params
+from bella_domify_spark.ops.pins import Pins
 
 
 def _md5_int60(col) -> Column:
@@ -34,20 +35,6 @@ def _md5_int60(col) -> Column:
     from bella_domify_spark.ops.hashfamily import md5_int60_col
 
     return md5_int60_col(col)
-
-
-def _eager_release(result: DataFrame, *persisted: DataFrame) -> DataFrame:
-    """Materialize ``result`` (eager localCheckpoint — small candidate-pair
-    outputs only) and release the persisted intermediates it reused, so an
-    operator call never leaves entries pinned in the session's cache
-    manager (the graph.py try/finally discipline). The checkpoint also
-    truncates the logical plan, which downstream iterative consumers
-    (duplicate_clusters) want anyway."""
-    try:
-        return result.localCheckpoint(eager=True)
-    finally:
-        for p in persisted:
-            p.unpersist()
 
 
 def _widen(df: DataFrame) -> DataFrame:
@@ -331,26 +318,27 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     # signatures are compact (num_hashes longs/doc) but expensive to build
     # (wide min-agg over exploded shingles) and reused three times —
     # persist for the single materializing pass, release before returning
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes).persist()
+    with Pins() as p:
+        sig = p.pin(minhash_signatures(df, id_col, text_col, n, num_hashes))
 
-    banded = minhash_band_buckets(sig, bands, rows_per_band)
+        banded = minhash_band_buckets(sig, bands, rows_per_band)
 
-    a = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-    b = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-    cand = (a.join(b, ["band", "bucket"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").distinct())
+        a = banded.select(F.col("id").alias("id_a"), "band", "bucket")
+        b = banded.select(F.col("id").alias("id_b"), "band", "bucket")
+        cand = (a.join(b, ["band", "bucket"])
+                 .filter(F.col("id_a") < F.col("id_b"))
+                 .select("id_a", "id_b").distinct())
 
-    sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (cand.join(sa, "id_a").join(sb, "id_b")
-           .withColumn("est_jaccard",
-                       F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                                  lambda x, y: x == y),
-                                       lambda m: m)) / F.lit(num_hashes))
-           .filter(F.col("est_jaccard") >= threshold)
-           .select("id_a", "id_b", "est_jaccard"))
-    return _eager_release(est, sig)
+        sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+        sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+        return p.result(
+            cand.join(sa, "id_a").join(sb, "id_b")
+            .withColumn("est_jaccard",
+                        F.size(F.filter(F.zip_with("sig_a", "sig_b",
+                                                   lambda x, y: x == y),
+                                        lambda m: m)) / F.lit(num_hashes))
+            .filter(F.col("est_jaccard") >= threshold)
+            .select("id_a", "id_b", "est_jaccard"))
 
 
 SIMHASH_BITS = 60  # md5-60bit token hash domain (see _md5_int60)
@@ -395,27 +383,29 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     mask = (1 << width) - 1
     # fingerprints: one long/doc, two consumers (chunk sides a and b) of an
     # expensive bit-vote aggregate — persist, release before returning
-    fp = simhash(df, id_col, text_col).persist()
-    chunks = fp.select(
-        "id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("chunk"),
-                     F.shiftright("simhash", i * width).bitwiseAND(F.lit(mask))
-                      .alias("key"))
-            for i in range(n_chunks)])).alias("c")
-    ).select("id", "simhash", "c.chunk", "c.key")
+    with Pins() as p:
+        fp = p.pin(simhash(df, id_col, text_col))
+        chunks = fp.select(
+            "id", "simhash",
+            F.explode(F.array(*[
+                F.struct(F.lit(i).alias("chunk"),
+                         F.shiftright("simhash", i * width)
+                          .bitwiseAND(F.lit(mask)).alias("key"))
+                for i in range(n_chunks)])).alias("c")
+        ).select("id", "simhash", "c.chunk", "c.key")
 
-    a = chunks.select(F.col("id").alias("id_a"), F.col("simhash").alias("s_a"),
-                      "chunk", "key")
-    b = chunks.select(F.col("id").alias("id_b"), F.col("simhash").alias("s_b"),
-                      "chunk", "key")
-    pairs = (a.join(b, ["chunk", "key"])
-              .filter(F.col("id_a") < F.col("id_b"))
-              .select("id_a", "id_b", "s_a", "s_b").distinct()
-              .withColumn("hamming", F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b"))))
-              .filter(F.col("hamming") <= max_hamming)
-              .select("id_a", "id_b", "hamming"))
-    return _eager_release(pairs, fp)
+        a = chunks.select(F.col("id").alias("id_a"),
+                          F.col("simhash").alias("s_a"), "chunk", "key")
+        b = chunks.select(F.col("id").alias("id_b"),
+                          F.col("simhash").alias("s_b"), "chunk", "key")
+        return p.result(
+            a.join(b, ["chunk", "key"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", "s_a", "s_b").distinct()
+            .withColumn("hamming",
+                        F.bit_count(F.col("s_a").bitwiseXOR(F.col("s_b"))))
+            .filter(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming"))
 
 
 def duplicate_clusters(df: DataFrame, id_col: str = "doc_id",
@@ -849,54 +839,55 @@ def ppjoin_pairs(df: DataFrame, id_col: str = "doc_id",
     # pipelines below (prefix sides + verify sides): persist IT — one
     # corpus aggregate instead of four — while the corpus-sized shingle
     # stream itself stays recompute-not-cache (the jaccard_pairs
-    # discipline); released via _eager_release. The papers' global
-    # frequency order needs NO dense rank (and therefore NO global
+    # discipline); released once the result is materialized. The papers'
+    # global frequency order needs NO dense rank (and therefore NO global
     # window anywhere): (f, shingle) is already a total order, the
     # per-document prefix positions come from an id-partitioned window
     # over it, and both the candidate and verify joins key on the
     # shingle itself. The per-document set size rides the explode as a
     # map-side array projection (jaccard_pairs note) — formerly a second
     # unordered window pass over the id partition.
-    freq = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
-            .persist())
-    tok = (arrs.select("id", F.size("sharr").cast("long").alias("s"),
-                       F.explode("sharr").alias("shingle"))
-           .join(freq, "shingle").select("id", "shingle", "f", "s"))
-    wid = Window.partitionBy("id")
-    tokp = tok.withColumn("pos", F.row_number().over(
-        wid.orderBy("f", "shingle")))
-    ceil_ts = F.expr(f"({t_num} * s + {t_den - 1}) div {t_den}")
-    pref = tokp.filter(F.col("pos") <= F.col("s") - ceil_ts + 1)
-    a = pref.select(F.col("id").alias("id_a"),
-                    F.col("s").cast("long").alias("n_a"), "shingle")
-    b = pref.select(F.col("id").alias("id_b"),
-                    F.col("s").cast("long").alias("n_b"), "shingle")
-    cand = (a.join(b, "shingle")
-            .filter((F.col("id_a") < F.col("id_b"))
-                    & (t_den * F.col("n_a") >= t_num * F.col("n_b"))
-                    & (t_den * F.col("n_b") >= t_num * F.col("n_a")))
-            .select("id_a", "id_b", "n_a", "n_b").distinct())
-    # verification via the in-row arrays: two doc-keyed joins fetch each
-    # side's distinct-shingle array and ONE map-side array_intersect
-    # computes the exact intersection — replacing the former re-join of
-    # the fully exploded shingle stream against the candidates (two more
-    # corpus-stream shuffles + a pair aggregate; guide §2.4). Exact
-    # equivalence: the arrays are per-doc distinct, so
-    # size(array_intersect) IS the shared-shingle count (verified
-    # exceptAll-empty both ways at sf0.1, ~1.2 s faster in-window).
-    aa = arrs.select(F.col("id").alias("id_a"), F.col("sharr").alias("sa"))
-    ab = arrs.select(F.col("id").alias("id_b"), F.col("sharr").alias("sb"))
-    inter = (cand.join(aa, "id_a").join(ab, "id_b")
-             .select("id_a", "id_b", "n_a", "n_b",
-                     F.size(F.array_intersect("sa", "sb")).cast("long")
-                      .alias("n_common")))
-    out = (inter.filter(t_den * F.col("n_common")
-                        >= t_num * (F.col("n_a") + F.col("n_b")
-                                    - F.col("n_common")))
-           .select("id_a", "id_b", "n_a", "n_b", "n_common",
-                   F.expr("cast(n_common as decimal(38,0)) * 1000000"
-                          " div (n_a + n_b - n_common)").alias("jacc_e6")))
-    return _eager_release(out, freq)
+    with Pins() as p:
+        freq = p.pin(sh.groupBy("shingle")
+                     .agg(F.count(F.lit(1)).alias("f")))
+        tok = (arrs.select("id", F.size("sharr").cast("long").alias("s"),
+                           F.explode("sharr").alias("shingle"))
+               .join(freq, "shingle").select("id", "shingle", "f", "s"))
+        wid = Window.partitionBy("id")
+        tokp = tok.withColumn("pos", F.row_number().over(
+            wid.orderBy("f", "shingle")))
+        ceil_ts = F.expr(f"({t_num} * s + {t_den - 1}) div {t_den}")
+        pref = tokp.filter(F.col("pos") <= F.col("s") - ceil_ts + 1)
+        a = pref.select(F.col("id").alias("id_a"),
+                        F.col("s").cast("long").alias("n_a"), "shingle")
+        b = pref.select(F.col("id").alias("id_b"),
+                        F.col("s").cast("long").alias("n_b"), "shingle")
+        cand = (a.join(b, "shingle")
+                .filter((F.col("id_a") < F.col("id_b"))
+                        & (t_den * F.col("n_a") >= t_num * F.col("n_b"))
+                        & (t_den * F.col("n_b") >= t_num * F.col("n_a")))
+                .select("id_a", "id_b", "n_a", "n_b").distinct())
+        # verification via the in-row arrays: two doc-keyed joins fetch each
+        # side's distinct-shingle array and ONE map-side array_intersect
+        # computes the exact intersection — replacing the former re-join of
+        # the fully exploded shingle stream against the candidates (two more
+        # corpus-stream shuffles + a pair aggregate; guide §2.4). Exact
+        # equivalence: the arrays are per-doc distinct, so
+        # size(array_intersect) IS the shared-shingle count (verified
+        # exceptAll-empty both ways at sf0.1, ~1.2 s faster in-window).
+        aa = arrs.select(F.col("id").alias("id_a"), F.col("sharr").alias("sa"))
+        ab = arrs.select(F.col("id").alias("id_b"), F.col("sharr").alias("sb"))
+        inter = (cand.join(aa, "id_a").join(ab, "id_b")
+                 .select("id_a", "id_b", "n_a", "n_b",
+                         F.size(F.array_intersect("sa", "sb")).cast("long")
+                          .alias("n_common")))
+        out = (inter.filter(t_den * F.col("n_common")
+                            >= t_num * (F.col("n_a") + F.col("n_b")
+                                        - F.col("n_common")))
+               .select("id_a", "id_b", "n_a", "n_b", "n_common",
+                       F.expr("cast(n_common as decimal(38,0)) * 1000000"
+                              " div (n_a + n_b - n_common)").alias("jacc_e6")))
+        return p.result(out)
 
 
 def ppjoin_oracle_sql(t_num: int = PPJOIN_T_NUM,
@@ -995,35 +986,35 @@ def blocking_quality(df: DataFrame, id_col: str = "doc_id",
 
     Output: one row (n_docs, n_true, n_cand, n_found, rr_e6, pc_e6).
     """
-    truth = (jaccard_pairs(df, id_col, text_col, n, threshold)
-             .select("id_a", "id_b").persist())
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes) \
-        .persist()
-    banded = minhash_band_buckets(sig, bands, num_hashes // bands)
-    a = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-    b = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-    cand = (a.join(b, ["band", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
-    # shingle-bearing doc count straight off the in-row arrays — no
-    # explode, no corpus-wide distinct (guide §2.4)
-    nd = (shingle_arrays(df, id_col, text_col, n)
-          .filter(F.size("sharr") > 0)
-          .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-    t = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
-    c = cand.agg(F.count(F.lit(1)).cast("long").alias("n_cand"))
-    f = (cand.join(truth, ["id_a", "id_b"])
-         .agg(F.count(F.lit(1)).cast("long").alias("n_found")))
-    out = (nd.crossJoin(t).crossJoin(c).crossJoin(f)
-           .filter(F.col("n_true") > 0)
-           .select("n_docs", "n_true", "n_cand", "n_found",
-                   F.expr("(cast(n_docs as decimal(38,0)) * (n_docs - 1)"
-                          " div 2 - n_cand) * 1000000"
-                          " div (cast(n_docs as decimal(38,0))"
-                          " * (n_docs - 1) div 2)").alias("rr_e6"),
-                   F.expr("cast(n_found as decimal(38,0)) * 1000000"
-                          " div n_true").alias("pc_e6")))
-    return _eager_release(out, truth, sig)
+    with Pins() as p:
+        truth = p.pin(jaccard_pairs(df, id_col, text_col, n, threshold)
+                      .select("id_a", "id_b"))
+        sig = p.pin(minhash_signatures(df, id_col, text_col, n, num_hashes))
+        banded = minhash_band_buckets(sig, bands, num_hashes // bands)
+        a = banded.select(F.col("id").alias("id_a"), "band", "bucket")
+        b = banded.select(F.col("id").alias("id_b"), "band", "bucket")
+        cand = (a.join(b, ["band", "bucket"])
+                .filter(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b").distinct())
+        # shingle-bearing doc count straight off the in-row arrays — no
+        # explode, no corpus-wide distinct (guide §2.4)
+        nd = (shingle_arrays(df, id_col, text_col, n)
+              .filter(F.size("sharr") > 0)
+              .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
+        t = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
+        c = cand.agg(F.count(F.lit(1)).cast("long").alias("n_cand"))
+        f = (cand.join(truth, ["id_a", "id_b"])
+             .agg(F.count(F.lit(1)).cast("long").alias("n_found")))
+        return p.result(
+            nd.crossJoin(t).crossJoin(c).crossJoin(f)
+            .filter(F.col("n_true") > 0)
+            .select("n_docs", "n_true", "n_cand", "n_found",
+                    F.expr("(cast(n_docs as decimal(38,0)) * (n_docs - 1)"
+                           " div 2 - n_cand) * 1000000"
+                           " div (cast(n_docs as decimal(38,0))"
+                           " * (n_docs - 1) div 2)").alias("rr_e6"),
+                    F.expr("cast(n_found as decimal(38,0)) * 1000000"
+                           " div n_true").alias("pc_e6")))
 
 
 def dedup_savings(docs: DataFrame, id_col: str = "doc_id",

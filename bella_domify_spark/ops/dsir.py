@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from bella_domify_spark.ops.hashfamily import md5_int60_col
+from bella_domify_spark.ops.pins import Pins
 
 __all__ = ["dsir_weights", "DSIR_BUCKETS", "dsir_lambda_sql"]
 
@@ -82,9 +83,9 @@ def dsir_weights(docs: DataFrame,
     # md5 per instance (the expensive part). Unlike the shingle streams
     # (deliberately uncached — dedup.py:106), this aggregate is bounded
     # by docs × min(feats, n_buckets) short rows, the scale-right cache.
-    db = (inst.groupBy("doc_id", "is_target", "b")
-              .agg(F.count(F.lit(1)).alias("cnt")).persist())
-    try:
+    with Pins() as p:
+        db = p.pin(inst.groupBy("doc_id", "is_target", "b")
+                   .agg(F.count(F.lit(1)).alias("cnt")))
         counts = db.filter(F.col("b").isNotNull()).groupBy("b").agg(
             F.sum(F.when(F.col("is_target"), F.col("cnt")).otherwise(0))
              .alias("t_cnt"),
@@ -108,11 +109,8 @@ def dsir_weights(docs: DataFrame,
                           F.coalesce(F.sum(F.col("cnt") * F.col("lam_e9")),
                                      F.lit(0)).cast("long")
                            .alias("logw_e9")))
-        out = per_doc.select("doc_id", "is_target", "n_feats", "logw_e9") \
-                     .localCheckpoint(eager=True)
-    finally:
-        db.unpersist()
-    return out
+        return p.result(per_doc.select("doc_id", "is_target", "n_feats",
+                                       "logw_e9"))
 
 
 def dsir_lambda_sql(n_buckets: int = DSIR_BUCKETS) -> str:

@@ -20,14 +20,18 @@ Scale notes (100 TB): the input is the *pair* output of a candidate
 generator (LSH bands, simhash chunks, hyperplane buckets) — orders of
 magnitude smaller than the corpus. Every round shuffles only edges +
 labels keyed by node id, broadcast-free and skew-tolerant (messages group
-by node, not by cluster, so a giant cluster salts naturally). Per-round
-persist/unpersist keeps lineage flat; the final result is eagerly
-localCheckpoint-ed so loop caches release immediately.
+by node, not by cluster, so a giant cluster salts naturally). Each
+round's frontier is an eager checkpoint taken through ``ops.pins.Pins``,
+which keeps the plan one round deep and releases the round it replaced;
+the result is materialized through the same scope, so once an op returns
+nothing but its result stays pinned.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from bella_domify_spark.ops.pins import Pins
 
 
 def _symmetrize(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -36,48 +40,32 @@ def _symmetrize(pairs: DataFrame, src: str, dst: str) -> DataFrame:
                                    F.col(src).alias("dst"))))
 
 
-def _ckpt(df: DataFrame, mode: str) -> DataFrame:
-    """Per-round materialization. ``local`` (default) stores blocks on
-    executors — fastest, but an executor loss mid-loop fails the job (it
-    cannot recompute a truncated lineage). ``reliable`` writes to the
-    directory set via ``sparkContext.setCheckpointDir`` (HDFS/object
-    store) and survives executor loss — the right mode for long loops on
-    large clusters. Both truncate the logical plan, which is the point
-    (see module docstring)."""
-    if mode == "reliable":
-        return df.checkpoint(eager=True)
-    if mode != "local":
-        # a typo here would silently demote a long loop to executor-local
-        # blocks — defeating the exact guarantee the caller asked for
-        raise ValueError(f"unknown checkpoint mode {mode!r}")
-    return df.localCheckpoint(eager=True)
-
-
-def _finish(labels: DataFrame, node_out: str, ckpt: str) -> DataFrame:
+def _finish(labels: DataFrame, node_out: str, pins: Pins) -> DataFrame:
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (labels.join(sizes, "label")
             .select(F.col("node").alias(node_out),
                     F.col("label").alias("canonical_id"),
                     "cluster_size")
-            .transform(lambda d: _ckpt(d, ckpt)))
+            .transform(pins.result))
 
 
-def _label_prop(sym: DataFrame, max_iter: int, ckpt: str) -> DataFrame:
+def _label_prop(sym: DataFrame, max_iter: int, pins: Pins) -> DataFrame:
     """Min-label propagation; returns (node, label) at fixpoint or raises."""
     labels = (sym.select(F.col("src").alias("node")).distinct()
               .withColumn("label", F.col("node"))
-              .transform(lambda d: _ckpt(d, ckpt)))
+              .transform(pins.materialize))
     for _ in range(max_iter):
         msgs = (sym.join(labels, sym.src == labels.node)
                 .select(F.col("dst").alias("node"), F.col("label")))
-        # eager localCheckpoint (not persist): truncates the logical plan
+        # eager checkpoint (not persist): truncates the logical plan
         # so per-round analysis cost stays constant across iterations
         new = (labels.unionAll(msgs).groupBy("node")
                .agg(F.min("label").alias("label"))
-               .transform(lambda d: _ckpt(d, ckpt)))
+               .transform(pins.materialize))
         changed = (new.alias("n").join(labels.alias("o"), "node")
                    .filter(F.col("n.label") != F.col("o.label"))
                    .limit(1).count())
+        pins.release(labels)
         labels = new
         if changed == 0:
             return labels
@@ -88,7 +76,7 @@ def _label_prop(sym: DataFrame, max_iter: int, ckpt: str) -> DataFrame:
         "algorithm='two_star'")
 
 
-def _two_star(sym: DataFrame, max_iter: int, ckpt: str) -> DataFrame:
+def _two_star(sym: DataFrame, max_iter: int, pins: Pins) -> DataFrame:
     """Large-star/small-star alternation; returns (node, label) at fixpoint.
 
     large-star: per node u over its full neighborhood N(u), connect every
@@ -98,15 +86,15 @@ def _two_star(sym: DataFrame, max_iter: int, ckpt: str) -> DataFrame:
     The edge set monotonically approaches a forest of stars rooted at each
     component's min; fixpoint = edge set unchanged.
     """
-    # each round's output is eagerly localCheckpoint-ed: unlike persist,
-    # this truncates the *logical* plan too, so Catalyst analysis cost
-    # stays constant per round instead of compounding (the classic
+    # each round's output is eagerly checkpointed: unlike persist, this
+    # truncates the *logical* plan too, so Catalyst analysis cost stays
+    # constant per round instead of compounding (the classic
     # iterative-DataFrame blowup — measured seconds-per-round growth on a
     # 12-edge graph without it)
     edges = (sym.filter(F.col("src") != F.col("dst"))
              .select(F.greatest("src", "dst").alias("src"),
                      F.least("src", "dst").alias("dst"))
-             .distinct().transform(lambda d: _ckpt(d, ckpt)))
+             .distinct().transform(pins.materialize))
 
     for _ in range(max_iter):
         # ---- large-star ----
@@ -131,9 +119,10 @@ def _two_star(sym: DataFrame, max_iter: int, ckpt: str) -> DataFrame:
         new = (ss.filter(F.col("src") != F.col("dst"))
                .select(F.greatest("src", "dst").alias("src"),
                        F.least("src", "dst").alias("dst"))
-               .distinct().transform(lambda d: _ckpt(d, ckpt)))
+               .distinct().transform(pins.materialize))
         changed = (new.exceptAll(edges).unionAll(edges.exceptAll(new))
                    .limit(1).count())
+        pins.release(edges)
         edges = new
         if changed == 0:
             break
@@ -148,7 +137,7 @@ def _two_star(sym: DataFrame, max_iter: int, ckpt: str) -> DataFrame:
     root_of = edges.groupBy("src").agg(F.min("dst").alias("label"))
     return (nodes.join(root_of, nodes.node == root_of.src, "left")
             .select("node", F.coalesce("label", "node").alias("label"))
-            .transform(lambda d: _ckpt(d, ckpt)))
+            .transform(pins.materialize))
 
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
@@ -161,20 +150,18 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
 
     ``pairs`` is any near-dup candidate output (jaccard_pairs,
     simhash_near_dups, embedding_near_dups, minhash_lsh_pairs). See module
-    docstring for the algorithm trade-off, and ``_ckpt`` for the
+    docstring for the algorithm trade-off, and ``pins.materialize`` for the
     ``checkpoint`` mode ("local" default; "reliable" uses the cluster
     checkpoint dir and survives executor loss on long loops)."""
-    sym = _symmetrize(pairs, src, dst).persist()
-    try:
+    with Pins(checkpoint) as p:
+        sym = p.pin(_symmetrize(pairs, src, dst))
         if algorithm == "label_prop":
-            labels = _label_prop(sym, max_iter, checkpoint)
+            labels = _label_prop(sym, max_iter, p)
         elif algorithm == "two_star":
-            labels = _two_star(sym, max_iter, checkpoint)
+            labels = _two_star(sym, max_iter, p)
         else:
             raise ValueError(f"unknown algorithm {algorithm!r}")
-        return _finish(labels, node_out, checkpoint)
-    finally:
-        sym.unpersist()
+        return _finish(labels, node_out, p)
 
 
 def pagerank(pairs: DataFrame, nodes: DataFrame,
@@ -209,43 +196,35 @@ def pagerank(pairs: DataFrame, nodes: DataFrame,
     # persist: the edge list's lineage is the whole candidate-generator
     # DAG (shingle explode + self-join for the jaccard edges); without
     # pinning it, every iteration's join AND the degree table re-run that
-    # DAG (~iters+2 recomputes). try/finally per ops/graph.py discipline.
-    edges = sym.join(deg, "src").persist()
-    try:
+    # DAG (~iters+2 recomputes). Both pins go once the result is
+    # materialized.
+    with Pins() as p:
+        edges = p.pin(sym.join(deg, "src"))
         nn = nodes.select(F.col(node_col).alias("node"))
         nt = nn.agg(F.count(F.lit(1)).alias("n"))
-        base = nn.crossJoin(F.broadcast(nt)).select(
+        base = p.pin(nn.crossJoin(F.broadcast(nt)).select(
             "node",
             F.expr(f"({scale} div n) ").alias("r0"),
             F.expr(f"((3 * {scale}) div 20) div n").alias("base"),
-        ).persist()
-        try:
-            r = base.select("node", F.col("r0").alias("rank"))
-            for _ in range(iters):
-                contrib = (edges.join(r, edges["src"] == r["node"])
-                                .select(F.col("dst"),
-                                        F.expr("rank div deg").alias("m"))
-                                .groupBy("dst").agg(F.sum("m").alias("c")))
-                r = (base.join(contrib, base["node"] == contrib["dst"],
-                               "left")
-                         .select(base["node"],
-                                 (F.col("base")
-                                  + F.expr("(17 * coalesce(c, 0L)) div 20"))
-                                 .alias("rank")))
-            deg_only = edges.select("src", "deg").groupBy("src").agg(
-                F.first("deg").alias("deg"))
-            out = (r.join(deg_only, r["node"] == deg_only["src"], "left")
-                    .select(F.col("node").alias(node_col),
-                            F.coalesce("deg", F.lit(0)).cast("long")
-                             .alias("deg"),
-                            F.col("rank").alias("rank_e12")))
-            # materialize before releasing the caches the plan feeds on
-            out = out.localCheckpoint(eager=True)
-        finally:
-            base.unpersist()
-    finally:
-        edges.unpersist()
-    return out
+        ))
+        r = base.select("node", F.col("r0").alias("rank"))
+        for _ in range(iters):
+            contrib = (edges.join(r, edges["src"] == r["node"])
+                            .select(F.col("dst"),
+                                    F.expr("rank div deg").alias("m"))
+                            .groupBy("dst").agg(F.sum("m").alias("c")))
+            r = (base.join(contrib, base["node"] == contrib["dst"], "left")
+                     .select(base["node"],
+                             (F.col("base")
+                              + F.expr("(17 * coalesce(c, 0L)) div 20"))
+                             .alias("rank")))
+        deg_only = edges.select("src", "deg").groupBy("src").agg(
+            F.first("deg").alias("deg"))
+        return p.result(
+            r.join(deg_only, r["node"] == deg_only["src"], "left")
+             .select(F.col("node").alias(node_col),
+                     F.coalesce("deg", F.lit(0)).cast("long").alias("deg"),
+                     F.col("rank").alias("rank_e12")))
 
 
 def triangle_stats(pairs: DataFrame) -> DataFrame:
@@ -530,23 +509,26 @@ def kcore_peel(pairs: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     # rounds+1 recomputes of the most expensive subtree (guide §2.4:
     # remove repeated work feeding a loop). Measured at sf0.1:
     # 13.6 s → 5.4 s for the 3-round peel.
-    sym = _ckpt(_symmetrize(e, "a", "b"), "local")
-    alive = sym.select("src").distinct()
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    for r in range(rounds):
-        if r == 0:
-            # round 1's alive set is ALL endpoints, so the induced
-            # subgraph is sym itself — skip the two no-op semijoins
-            induced = sym
-        else:
-            induced = (sym.join(alive.select("src"), "src")
-                          .join(alive.select(F.col("src").alias("dst")),
-                                "dst"))
-        deg = induced.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        alive = _ckpt(deg.filter(F.col("deg") >= k).select("src"), "local")
-    return (deg.join(alive, "src")
-               .select(F.col("src").alias("node_id"),
-                       F.col("deg").alias("core_deg")))
+    with Pins() as p:
+        sym = p.materialize(_symmetrize(e, "a", "b"))
+        alive = sym.select("src").distinct()
+        deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        for r in range(rounds):
+            if r == 0:
+                # round 1's alive set is ALL endpoints, so the induced
+                # subgraph is sym itself — skip the two no-op semijoins
+                induced = sym
+            else:
+                induced = (sym.join(alive.select("src"), "src")
+                              .join(alive.select(F.col("src").alias("dst")),
+                                    "dst"))
+            deg = induced.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+            alive = p.materialize(deg.filter(F.col("deg") >= k).select("src"))
+        # the last degree table reads sym and the last two frontiers:
+        # materialize the result so that every pin can go
+        return p.result(deg.join(alive, "src")
+                        .select(F.col("src").alias("node_id"),
+                                F.col("deg").alias("core_deg")))
 
 
 def lpa_communities(pairs: DataFrame, rounds: int = 3) -> DataFrame:
@@ -575,27 +557,31 @@ def lpa_communities(pairs: DataFrame, rounds: int = 3) -> DataFrame:
     """
     # one-shot materialization of the edge list (the kcore_peel rationale:
     # every round's checkpoint would re-run the pair-generator DAG)
-    sym = _ckpt(_symmetrize(pairs, "id_a", "id_b"), "local")
-    labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("lab", F.col("node"))
-              .transform(lambda d: _ckpt(d, "local")))
-    for _ in range(rounds):
-        msgs = (sym.join(labels, sym.dst == labels.node)
-                .select("src", "lab"))
-        counts = msgs.groupBy("src", "lab").agg(F.count(F.lit(1)).alias("c"))
-        # modal pick as one hash aggregate: max of (c, −lab) structs ≡
-        # the former row_number window ordered (c DESC, lab ASC), minus
-        # its per-partition sort — a hash agg with map-side combine
-        # replaces the window's sort pass (guide §2.3)
-        labels = (counts.groupBy("src")
-                  .agg(F.max(F.struct(F.col("c"),
-                                      (-F.col("lab")).alias("nl")))
-                       .alias("m"))
-                  .select(F.col("src").alias("node"),
-                          (-F.col("m.nl")).alias("lab"))
-                  .transform(lambda d: _ckpt(d, "local")))
-    return labels.select(F.col("node").alias("node_id"),
-                         F.col("lab").alias("community"))
+    with Pins() as p:
+        sym = p.materialize(_symmetrize(pairs, "id_a", "id_b"))
+        labels = (sym.select(F.col("src").alias("node")).distinct()
+                  .withColumn("lab", F.col("node"))
+                  .transform(p.materialize))
+        for _ in range(rounds):
+            msgs = (sym.join(labels, sym.dst == labels.node)
+                    .select("src", "lab"))
+            counts = msgs.groupBy("src", "lab").agg(
+                F.count(F.lit(1)).alias("c"))
+            # modal pick as one hash aggregate: max of (c, −lab) structs ≡
+            # the former row_number window ordered (c DESC, lab ASC), minus
+            # its per-partition sort — a hash agg with map-side combine
+            # replaces the window's sort pass (guide §2.3)
+            new = (counts.groupBy("src")
+                   .agg(F.max(F.struct(F.col("c"),
+                                       (-F.col("lab")).alias("nl")))
+                        .alias("m"))
+                   .select(F.col("src").alias("node"),
+                           (-F.col("m.nl")).alias("lab"))
+                   .transform(p.materialize))
+            p.release(labels)
+            labels = new
+        return p.keep(labels).select(F.col("node").alias("node_id"),
+                                     F.col("lab").alias("community"))
 
 
 def neighborhood_sizes(pairs: DataFrame, radius: int = 2) -> DataFrame:
@@ -621,18 +607,20 @@ def neighborhood_sizes(pairs: DataFrame, radius: int = 2) -> DataFrame:
     # one-shot materialization (kcore_peel rationale): each hop extension
     # joins sym again, and the per-hop checkpoints would re-run the
     # pair-generator DAG once per hop otherwise
-    sym = _ckpt(_symmetrize(pairs, "id_a", "id_b"), "local")
-    ball = sym.distinct().transform(lambda d: _ckpt(d, "local"))
-    for _ in range(radius - 1):
-        ext = (ball.alias("b")
-               .join(sym.alias("e"), F.col("b.dst") == F.col("e.src"))
-               .select(F.col("b.src").alias("src"),
-                       F.col("e.dst").alias("dst"))
-               .filter(F.col("src") != F.col("dst")))
-        ball = (ball.unionByName(ext).distinct()
-                .transform(lambda d: _ckpt(d, "local")))
-    return ball.groupBy(F.col("src").alias("node_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("ball_size"))
+    with Pins() as p:
+        sym = p.materialize(_symmetrize(pairs, "id_a", "id_b"))
+        ball = sym.distinct().transform(p.materialize)
+        for _ in range(radius - 1):
+            ext = (ball.alias("b")
+                   .join(sym.alias("e"), F.col("b.dst") == F.col("e.src"))
+                   .select(F.col("b.src").alias("src"),
+                           F.col("e.dst").alias("dst"))
+                   .filter(F.col("src") != F.col("dst")))
+            new = ball.unionByName(ext).distinct().transform(p.materialize)
+            p.release(ball)
+            ball = new
+        return p.keep(ball).groupBy(F.col("src").alias("node_id")).agg(
+            F.count(F.lit(1)).cast("long").alias("ball_size"))
 
 
 def assortativity(pairs: DataFrame) -> DataFrame:

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from bella_domify_spark.ops.pins import Pins
+
 __all__ = ["bm25_topk", "bm25_prf", "hybrid_rrf", "retrieval_eval",
            "BM25_QUERIES", "RRF_C"]
 
@@ -56,20 +58,20 @@ def queries_values_sql() -> str:
     return f"(VALUES {rows}) AS q(query_id, term)"
 
 
-def _postings(docs: DataFrame, id_col: str, text_col: str):
+def _postings(docs: DataFrame, id_col: str, text_col: str, pins: Pins):
     """The shared BM25 statistics build: (tf, dl, dft, corpus). tf is the
     one corpus-sized shuffle — token stream -> (doc, term) counts —
     PERSISTED because every consumer (hits, dl, dft, corpus-via-dl) would
     otherwise rescan + re-aggregate the raw token stream; it is the
     compact postings table (O(docs × distinct terms)), the canonical
-    thing to pin. Callers release it before returning (dedup.py cache
-    discipline)."""
+    thing to pin. It is released when the caller's ``pins`` scope
+    exits."""
     toks = (docs.select(F.col(id_col).alias("id"),
                         F.explode(F.split(F.lower(F.col(text_col)),
                                           r"\s+")).alias("term"))
             .filter(F.col("term") != ""))
-    tf = (toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
-          .persist())
+    tf = pins.pin(toks.groupBy("id", "term")
+                  .agg(F.count(F.lit(1)).alias("tf")))
     # dl and df both derive from tf (aggregate-sized), not from toks
     dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
     corpus = dl.agg(F.count(F.lit(1)).alias("n_docs"),
@@ -111,34 +113,34 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, str]] | None = None,
     engine-order-independent — the oracle embeds the folded literals."""
     spark = docs.sparkSession
     queries = BM25_QUERIES if queries is None else queries
-    tf, dl, dft, corpus = _postings(docs, id_col, text_col)
-    qterms = _qterms_df(spark, queries)
+    with Pins() as p:
+        tf, dl, dft, corpus = _postings(docs, id_col, text_col, p)
+        qterms = _qterms_df(spark, queries)
 
-    # prune tf to query vocabulary before any join fan-out; prune dft the
-    # same way BEFORE broadcasting it — the full table is vocabulary-sized
-    # (every distinct corpus term) and only |query vocab| rows are ever
-    # joined, so broadcasting it whole pays a vocabulary collect + hash
-    # build per pass for nothing (guide §3.1: broadcast the SMALL side)
-    hits = tf.join(F.broadcast(qterms), "term")
-    dft_q = dft.join(F.broadcast(qterms.select("term").distinct()),
-                     "term", "left_semi")
-    contrib = (hits
-               .join(F.broadcast(dft_q), "term")
-               .join(dl, "id")
-               .crossJoin(F.broadcast(corpus))
-               .select("query_id", "id", _contrib_e9(k1, b).alias("c_e9")))
-    scores = (contrib.groupBy("query_id", "id")
-              .agg(F.sum("c_e9").alias("s")))
-    w = Window.partitionBy("query_id").orderBy(F.col("s").desc(),
-                                               F.col("id").asc())
-    from bella_domify_spark.ops.dedup import _eager_release
-
-    out = (scores.withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= k)
-           .select("query_id", "rank", F.col("id").alias(id_col),
-                   F.col("s").cast("long").alias("score_e9")))
-    # queries×k rows — small enough for the eager checkpoint
-    return _eager_release(out, tf)
+        # prune tf to query vocabulary before any join fan-out; prune dft
+        # the same way BEFORE broadcasting it — the full table is
+        # vocabulary-sized (every distinct corpus term) and only |query
+        # vocab| rows are ever joined, so broadcasting it whole pays a
+        # vocabulary collect + hash build per pass for nothing (guide
+        # §3.1: broadcast the SMALL side)
+        hits = tf.join(F.broadcast(qterms), "term")
+        dft_q = dft.join(F.broadcast(qterms.select("term").distinct()),
+                         "term", "left_semi")
+        contrib = (hits
+                   .join(F.broadcast(dft_q), "term")
+                   .join(dl, "id")
+                   .crossJoin(F.broadcast(corpus))
+                   .select("query_id", "id",
+                           _contrib_e9(k1, b).alias("c_e9")))
+        scores = (contrib.groupBy("query_id", "id")
+                  .agg(F.sum("c_e9").alias("s")))
+        w = Window.partitionBy("query_id").orderBy(F.col("s").desc(),
+                                                   F.col("id").asc())
+        # queries×k rows — small enough for the eager checkpoint
+        return p.result(scores.withColumn("rank", F.row_number().over(w))
+                        .filter(F.col("rank") <= k)
+                        .select("query_id", "rank", F.col("id").alias(id_col),
+                                F.col("s").cast("long").alias("score_e9")))
 
 
 def bm25_prf(docs: DataFrame, queries: list[tuple[str, str]] | None = None,
@@ -166,57 +168,56 @@ def bm25_prf(docs: DataFrame, queries: list[tuple[str, str]] | None = None,
     """
     spark = docs.sparkSession
     queries = BM25_QUERIES if queries is None else queries
-    tf, dl, dft, corpus = _postings(docs, id_col, text_col)
-    qterms = _qterms_df(spark, queries)
+    with Pins() as p:
+        tf, dl, dft, corpus = _postings(docs, id_col, text_col, p)
+        qterms = _qterms_df(spark, queries)
 
-    def score(weighted_terms: DataFrame) -> DataFrame:
-        # dft pruned to the scored vocabulary before broadcast — the
-        # bm25_topk rationale (full dft is vocabulary-sized)
-        hits = tf.join(F.broadcast(weighted_terms), "term")
-        dft_w = dft.join(
-            F.broadcast(weighted_terms.select("term").distinct()),
-            "term", "left_semi")
-        contrib = (hits
-                   .join(F.broadcast(dft_w), "term")
-                   .join(dl, "id")
-                   .crossJoin(F.broadcast(corpus))
-                   .select("query_id", "id",
-                           (_contrib_e9(k1, b)
-                            * F.col("w").cast("decimal(2,0)"))
-                           .alias("wc")))
-        return contrib.groupBy("query_id", "id").agg(F.sum("wc").alias("s"))
+        def score(weighted_terms: DataFrame) -> DataFrame:
+            # dft pruned to the scored vocabulary before broadcast — the
+            # bm25_topk rationale (full dft is vocabulary-sized)
+            hits = tf.join(F.broadcast(weighted_terms), "term")
+            dft_w = dft.join(
+                F.broadcast(weighted_terms.select("term").distinct()),
+                "term", "left_semi")
+            contrib = (hits
+                       .join(F.broadcast(dft_w), "term")
+                       .join(dl, "id")
+                       .crossJoin(F.broadcast(corpus))
+                       .select("query_id", "id",
+                               (_contrib_e9(k1, b)
+                                * F.col("w").cast("decimal(2,0)"))
+                               .alias("wc")))
+            return contrib.groupBy("query_id", "id").agg(
+                F.sum("wc").alias("s"))
 
-    base = score(qterms.withColumn("w", F.lit(1)))
-    wfb = Window.partitionBy("query_id").orderBy(F.col("s").desc(),
-                                                 F.col("id").asc())
-    fb_docs = (base.withColumn("r", F.row_number().over(wfb))
-               .filter(F.col("r") <= fb_k).select("query_id", "id"))
-    # expansion mining: postings of the feedback docs, minus query terms
-    fb_tf = (tf.join(F.broadcast(fb_docs), "id")
-             .groupBy("query_id", "term").agg(F.sum("tf").alias("sum_tf"))
-             .join(qterms, ["query_id", "term"], "left_anti"))
-    wexp = Window.partitionBy("query_id").orderBy(F.col("sum_tf").desc(),
-                                                  F.col("term").asc())
-    exp = (fb_tf.withColumn("r", F.row_number().over(wexp))
-           .filter(F.col("r") <= fb_terms).select("query_id", "term"))
-    # materialize the expanded term table (queries × (|q| + fb_terms)
-    # rows — driver-tiny): its lineage embeds the ENTIRE first scoring
-    # pass, and pass 2 references it from two broadcast builds (the hits
-    # prune and the dft prune) — without the checkpoint each broadcast
-    # re-runs the base ranking + expansion mining from scratch
-    weighted = (qterms.withColumn("w", F.lit(w_orig))
-                .unionAll(exp.withColumn("w", F.lit(w_exp)))
-                .localCheckpoint(eager=True))
-    rescored = score(weighted)
-    wk = Window.partitionBy("query_id").orderBy(F.col("s").desc(),
-                                                F.col("id").asc())
-    from bella_domify_spark.ops.dedup import _eager_release
-
-    out = (rescored.withColumn("rank", F.row_number().over(wk))
-           .filter(F.col("rank") <= k)
-           .select("query_id", "rank", F.col("id").alias(id_col),
-                   F.col("s").cast("long").alias("score_w_e9")))
-    return _eager_release(out, tf)
+        base = score(qterms.withColumn("w", F.lit(1)))
+        wfb = Window.partitionBy("query_id").orderBy(F.col("s").desc(),
+                                                     F.col("id").asc())
+        fb_docs = (base.withColumn("r", F.row_number().over(wfb))
+                   .filter(F.col("r") <= fb_k).select("query_id", "id"))
+        # expansion mining: postings of the feedback docs, minus query terms
+        fb_tf = (tf.join(F.broadcast(fb_docs), "id")
+                 .groupBy("query_id", "term").agg(F.sum("tf").alias("sum_tf"))
+                 .join(qterms, ["query_id", "term"], "left_anti"))
+        wexp = Window.partitionBy("query_id").orderBy(F.col("sum_tf").desc(),
+                                                      F.col("term").asc())
+        exp = (fb_tf.withColumn("r", F.row_number().over(wexp))
+               .filter(F.col("r") <= fb_terms).select("query_id", "term"))
+        # materialize the expanded term table (queries × (|q| + fb_terms)
+        # rows — driver-tiny): its lineage embeds the ENTIRE first scoring
+        # pass, and pass 2 references it from two broadcast builds (the
+        # hits prune and the dft prune) — without the checkpoint each
+        # broadcast re-runs the base ranking + expansion mining from scratch
+        weighted = (qterms.withColumn("w", F.lit(w_orig))
+                    .unionAll(exp.withColumn("w", F.lit(w_exp)))
+                    .transform(p.materialize))
+        rescored = score(weighted)
+        wk = Window.partitionBy("query_id").orderBy(F.col("s").desc(),
+                                                    F.col("id").asc())
+        return p.result(rescored.withColumn("rank", F.row_number().over(wk))
+                        .filter(F.col("rank") <= k)
+                        .select("query_id", "rank", F.col("id").alias(id_col),
+                                F.col("s").cast("long").alias("score_w_e9")))
 
 
 def discount_tables(k: int = 10):

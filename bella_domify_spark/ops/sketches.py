@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from bella_domify_spark.ops.pins import Pins
+
 M = 64          # registers (p = 6)
 W_BITS = 54     # 60-bit hash minus 6 bucket bits
 RHO_MAX = W_BITS + 1
@@ -323,35 +325,35 @@ def bottomk_estimate(docs: DataFrame, k: int = BK_K,
           .select("id", F.explode(F.slice(F.array_sort(
               F.transform("sharr", lambda g: _md5_int60(g))), 1, k))
               .alias("hv")))
-    tp = (jaccard_pairs(docs, threshold=threshold)
-          .select("id_a", "id_b",
-                  F.floor(F.col("jaccard") * 1e6).cast("long")
-                   .alias("true_e6")).persist())
-    ea = (tp.join(bk.withColumnRenamed("id", "id_a"), "id_a")
-          .select("id_a", "id_b", "hv", F.lit(1).alias("ia"),
-                  F.lit(0).alias("ib")))
-    eb = (tp.join(bk.withColumnRenamed("id", "id_b"), "id_b")
-          .select("id_a", "id_b", "hv", F.lit(0).alias("ia"),
-                  F.lit(1).alias("ib")))
-    g = (ea.unionByName(eb)
-         .groupBy("id_a", "id_b", "hv")
-         .agg(F.max("ia").alias("ia"), F.max("ib").alias("ib")))
-    wp = Window.partitionBy("id_a", "id_b").orderBy("hv")
-    r = g.withColumn("rn", F.row_number().over(wp))
-    s = (r.groupBy("id_a", "id_b")
-         .agg(F.sum(F.when((F.col("rn") <= k) & (F.col("ia") == 1)
-                           & (F.col("ib") == 1), 1).otherwise(0))
-               .cast("long").alias("num"),
-              F.sum(F.when(F.col("rn") <= k, 1).otherwise(0))
-               .cast("long").alias("keff")))
-    out = (s.join(tp, ["id_a", "id_b"])
-           .select("id_a", "id_b", "true_e6",
-                   F.expr("cast(num as decimal(38,0)) * 1000000"
-                          " div keff").alias("est_e6"))
-           .withColumn("err_e6", F.abs(F.col("est_e6")
-                                       - F.col("true_e6"))))
-    from bella_domify_spark.ops.dedup import _eager_release
-    return _eager_release(out, tp)
+    with Pins() as p:
+        tp = p.pin(jaccard_pairs(docs, threshold=threshold)
+                   .select("id_a", "id_b",
+                           F.floor(F.col("jaccard") * 1e6).cast("long")
+                            .alias("true_e6")))
+        ea = (tp.join(bk.withColumnRenamed("id", "id_a"), "id_a")
+              .select("id_a", "id_b", "hv", F.lit(1).alias("ia"),
+                      F.lit(0).alias("ib")))
+        eb = (tp.join(bk.withColumnRenamed("id", "id_b"), "id_b")
+              .select("id_a", "id_b", "hv", F.lit(0).alias("ia"),
+                      F.lit(1).alias("ib")))
+        g = (ea.unionByName(eb)
+             .groupBy("id_a", "id_b", "hv")
+             .agg(F.max("ia").alias("ia"), F.max("ib").alias("ib")))
+        wp = Window.partitionBy("id_a", "id_b").orderBy("hv")
+        r = g.withColumn("rn", F.row_number().over(wp))
+        s = (r.groupBy("id_a", "id_b")
+             .agg(F.sum(F.when((F.col("rn") <= k) & (F.col("ia") == 1)
+                               & (F.col("ib") == 1), 1).otherwise(0))
+                   .cast("long").alias("num"),
+                  F.sum(F.when(F.col("rn") <= k, 1).otherwise(0))
+                   .cast("long").alias("keff")))
+        out = (s.join(tp, ["id_a", "id_b"])
+               .select("id_a", "id_b", "true_e6",
+                       F.expr("cast(num as decimal(38,0)) * 1000000"
+                              " div keff").alias("est_e6"))
+               .withColumn("err_e6", F.abs(F.col("est_e6")
+                                           - F.col("true_e6"))))
+        return p.result(out)
 
 
 def bottomk_oracle_sql(k: int = BK_K, threshold: float = 0.2) -> str:

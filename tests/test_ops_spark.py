@@ -121,23 +121,68 @@ class TestDedup:
         assert (0, 2) in pairs
 
     def test_operators_release_their_caches(self, docs, spark):
-        # every dedup operator must leave the session's cache manager empty
-        # after its call: a leaked .cache() on a long shared session pins
-        # executor memory until LRU eviction (persist is released in the
-        # operator via _eager_release; jaccard deliberately never caches)
+        # every operator must leave the session's cache manager empty after
+        # its call, and at most ONE new persistent RDD (its result's own
+        # checkpoint): a leaked persist or a superseded per-round checkpoint
+        # on a long shared session pins executor memory until the session
+        # ends (everything goes through ops.pins.Pins; jaccard deliberately
+        # never caches)
         from bella_domify_spark.ops.dedup import (
             jaccard_pairs,
             minhash_lsh_pairs,
             simhash_near_dups,
         )
+        from bella_domify_spark.ops.dsir import dsir_weights
+        from bella_domify_spark.ops.graph import (
+            connected_components,
+            kcore_peel,
+            lpa_communities,
+            neighborhood_sizes,
+            pagerank,
+        )
+        from bella_domify_spark.ops.retrieval import bm25_prf
 
+        def pinned():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                       .toArray())
+
+        pairs = jaccard_pairs(docs, threshold=0.5)
         cache_mgr = spark._jsparkSession.sharedState().cacheManager()
         spark.catalog.clearCache()
         for op in (lambda d: jaccard_pairs(d, threshold=0.5),
                    lambda d: minhash_lsh_pairs(d, threshold=0.3),
-                   lambda d: simhash_near_dups(d, max_hamming=12)):
-            assert op(docs).count() > 0
+                   lambda d: simhash_near_dups(d, max_hamming=12),
+                   lambda d: connected_components(pairs),
+                   lambda d: connected_components(pairs,
+                                                  algorithm="two_star"),
+                   lambda d: kcore_peel(pairs),
+                   lambda d: lpa_communities(pairs),
+                   lambda d: neighborhood_sizes(pairs),
+                   lambda d: pagerank(pairs, d),
+                   lambda d: bm25_prf(d, queries=[("q", "quick fox")]),
+                   lambda d: dsir_weights(d.withColumn(
+                       "lang", F.when(F.col("doc_id") < 3, "en")
+                       .otherwise("de")))):
+            before = pinned()
+            assert len(op(docs).collect()) > 0
+            assert len(pinned() - before) <= 1, op
             assert cache_mgr.isEmpty(), op
+
+    def test_failed_loop_releases_every_round(self, spark):
+        # a non-converging label_prop raises mid-loop: the scope must still
+        # release the persisted edge list and every round's checkpoint
+        from bella_domify_spark.ops.graph import connected_components
+
+        chain = spark.createDataFrame([(i, i + 1) for i in range(5)],
+                                      "id_a bigint, id_b bigint")
+        before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                     .toArray())
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, max_iter=1)
+        after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                    .toArray())
+        assert after - before == set()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_incremental_dedup_screens_new_batch(self, spark):
         from bella_domify_spark.ops.dedup import incremental_dedup
