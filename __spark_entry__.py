@@ -1117,7 +1117,7 @@ def _q_manifest_stats(spark, sf):
     import shutil
 
     from bella_domify_spark.engine.manifest import run_resumable
-    from bella_domify_spark.ops.dedup import _md5_int60
+    from bella_domify_spark.ops.hashfamily import md5_int60_col
     from bella_domify_spark.ops.pins import materialize
 
     t = _t(spark, sf, "documents").select(
@@ -1132,8 +1132,8 @@ def _q_manifest_stats(spark, sf):
     out = ("/tmp/bds_manifests_"
            f"{hashlib.md5(sf.encode()).hexdigest()[:12]}_{os.getpid()}")
     shutil.rmtree(out, ignore_errors=True)
-    bexpr = F.pmod(_md5_int60(F.concat_ws(":", F.col("conv_id"),
-                                          F.col("turn_idx"))), F.lit(16))
+    bexpr = F.pmod(md5_int60_col(F.concat_ws(":", F.col("conv_id"),
+                                             F.col("turn_idx"))), F.lit(16))
     run_resumable(t, out, n_buckets=16, bucket_expr=bexpr)
     m = (spark.read.json(f"{out}/_manifests/bucket-*.json")
          .select(F.col("bucket").cast("long").alias("bucket"),

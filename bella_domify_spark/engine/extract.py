@@ -18,8 +18,8 @@ record struct) the only batch-parse body. Two plans run it:
     Arrow-batched parse UDF → (optional) stable (conv_id, turn_idx) order
 
 - **One shuffle** feeds the parse stage. Salting: ``salt = pmod(xxhash64(
-  conv_id, turn_idx), salt_buckets)`` and ``repartition(N, conv_id, salt)``
-  — a conversation with 10^6 turns spreads over ``salt_buckets`` partitions
+  conv_id, turn_idx), SALT_BUCKETS)`` and ``repartition(N, conv_id, salt)``
+  — a conversation with 10^6 turns spreads over ``SALT_BUCKETS`` partitions
   instead of hot-spotting one task (north_rule skew requirement). The hash
   is deterministic, so partition contents are reproducible → resumable.
 - **Ordering** is applied with ``repartitionByRange(conv_id, turn_idx) +
@@ -171,11 +171,16 @@ def detect_format_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: detect_format(t if isinstance(t, str) else None))
 
 
-def with_salt(df: DataFrame, salt_buckets: int = 8) -> DataFrame:
-    """Deterministic salt: long conversations fan out over ``salt_buckets``
+# skew fan-out per conversation: a conversation spreads over at most this
+# many parse partitions
+SALT_BUCKETS = 8
+
+
+def with_salt(df: DataFrame) -> DataFrame:
+    """Deterministic salt: long conversations fan out over ``SALT_BUCKETS``
     reducers while short ones stay co-located by conv_id."""
     return df.withColumn(
-        "salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets)).cast("int")
+        "salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(SALT_BUCKETS)).cast("int")
     )
 
 
@@ -191,7 +196,6 @@ def apply_parse(df: DataFrame, ocr_provider: Optional[str] = None) -> DataFrame:
 
 def extract_transcripts(df: DataFrame,
                         partitions: Optional[int] = None,
-                        salt_buckets: int = 8,
                         ordered: bool = False,
                         repartition: bool = True,
                         ocr_provider: Optional[str] = None) -> DataFrame:
@@ -201,14 +205,13 @@ def extract_transcripts(df: DataFrame,
         df: columns (conv_id, turn_idx, role, text, tool, ts).
         partitions: parse-stage parallelism (default: session shuffle
             partitions).
-        salt_buckets: skew fan-out per conversation.
         ordered: re-range-partition the output by (conv_id, turn_idx) for a
             globally ordered sink (adds the second shuffle).
         repartition: disable to parse with scan-native partitioning (useful
             when the source is already well distributed — saves the shuffle).
     """
     if repartition:
-        df = with_salt(df, salt_buckets)
+        df = with_salt(df)
         if partitions:
             df = df.repartition(partitions, "conv_id", "salt")
         else:

@@ -10,40 +10,95 @@ no Python UDFs — so Catalyst handles pushdown and AQE handles skew:
 - simhash            — 60-bit sign-vote over md5 token hashes, exploded per
                        bit and folded by two hash aggregates
 
-Scale notes: the shingle self-join shuffles on the shingle value; frequent
-shingles explode candidate pairs, so `jaccard_pairs` caps per-shingle
-fan-out (`max_shingle_freq`) — standard MinHash-LSH practice. MinHash/LSH
-reduces the candidate space from O(n²) to near-linear: pairs are generated
-only within LSH band buckets. MinHash memory is O(num_hashes) per document
-group (posexplode + min with map-side partial aggregation), never
-O(shingles) — a multi-MB document costs the same aggregation buffer as a
-tweet. Every hash derives from md5, so each operator has an exact DuckDB
-oracle twin (__spark_entry__.oracle_sql).
+Shingle substrate — the shape contract. The word and n-gram operators read
+four relations, each built by exactly one function here
+(tests/test_shingle_guard.py keeps it that way):
+
+- ``_words`` → ``(id, w)``, ``w = split(lower(text), '\\s+')``, ``[]`` for
+  a null text: the only word split and the only place ``_widen``
+  applies. A small single-file table scans as ONE split, which would
+  serialize the CPU-heavy chain that follows on one core; at real scale
+  (splits ≥ cores) the widen is a no-op. ``w`` stays behind its own
+  projection so CollapseProject cannot inline the split into a
+  multi-reference consumer (a ``transform`` lambda capturing ``split``
+  re-evaluates it per element: O(words²), ~23 s for one 10k-word
+  document). simhash explodes ``w`` (dropping ``""``); remove_dup_spans
+  posexplodes it.
+- ``shingle_arrays`` → ``(id, sharr)``: each document's word ``n``-grams as
+  one in-row array, ``arrays_zip`` of ``n`` shifted slices of ``w``
+  (O(words) per row); a document under ``n`` words gets ``[]``.
+  ``dedupe=True`` is a per-document ``array_distinct`` before any explode
+  (no corpus-wide ``distinct`` shuffle); ``dedupe=False`` keeps every
+  instance in position order (minhash_signatures, dup_span_stats,
+  remove_dup_spans). ``word_shingles`` is its explode, ``(id, shingle)``.
+  Per-document scalars (set sizes, bottom-k, has-any flags) are map-side
+  projections of the array, never an explode plus re-aggregate.
+- ``_capped_pair_counts`` → ``(id_a, id_b, [n_a, n_b,] n_common)``: the
+  distinct shingles two documents share, counted after the stop-shingle
+  cap (shingles in more than ``max_shingle_freq`` documents produce
+  quadratic candidates without adding signal). ``n_a``/``n_b`` are the
+  uncapped set sizes, carried through the pair join as grouping keys.
+  jaccard_pairs, containment_pairs and cooccurrence_pairs differ only in
+  the pair predicate, threshold and projection.
+- No inferred filter may copy the construction. Catalyst pushes a
+  filter on ``w``/``sharr`` through the projections by inlining their
+  expressions, so it would run the split (or the whole n-gram
+  construction) once more, serially, in the scan task below ``_widen``.
+  Two rules keep inferred filters out: ``w`` is never null, so nothing
+  built from it is nullable and no ``isnotnull`` is inferred; and every
+  explode of ``w`` or ``sharr`` goes through ``_elements``
+  (``array_compact``, a no-op: the arrays hold no nulls), because a
+  generator over a bare column gets an inferred ``size(col) > 0``
+  (InferFiltersFromGenerate). remove_dup_spans at sf0.1 on 4 cores:
+  6.4 s with the inferred filter, 3.9 s without.
+- ``_band_candidates`` → distinct ``(id_a, id_b)``, ``id_a < id_b``: pairs
+  that share a ``minhash_band_buckets`` bucket in any band
+  (minhash_lsh_pairs, blocking_quality).
+
+The exploded shingle stream is never cached: it is ~n× the input, and
+recomputing it (scan + split, narrow and codegen'd) is cheaper than
+pinning or spilling it.
+
+Scale notes: the shingle self-join shuffles on the shingle value and the
+frequency cap bounds its fan-out — standard MinHash-LSH practice.
+MinHash/LSH reduces the candidate space from O(n²) to near-linear: pairs
+are generated only within LSH band buckets. MinHash memory is
+O(num_hashes) per document group (one wide min-aggregate with map-side
+partial combine), never O(shingles) — a multi-MB document costs the same
+aggregation buffer as a tweet. Every hash derives from md5
+(hashfamily.md5_int60_col), so each operator has an exact DuckDB oracle
+twin (__spark_entry__.oracle_sql).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from bella_domify_spark.ops.hashfamily import MERSENNE_P, minhash_params
+from bella_domify_spark.ops.hashfamily import (MERSENNE_P, md5_int60_col,
+                                               minhash_params)
 from bella_domify_spark.ops.pins import Pins
 
 
-def _md5_int60(col) -> Column:
-    """Shared text→int map — single definition in hashfamily.md5_int60_col
-    (DuckDB twin: ('0x'||substr(md5(s),1,15))::BIGINT)."""
-    from bella_domify_spark.ops.hashfamily import md5_int60_col
-
-    return md5_int60_col(col)
-
-
 def _widen(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the input is under-split (fewer
-    partitions than cores). A small single-file table scans as ONE split,
-    which would serialize the CPU-heavy map-side hashing that follows; at
-    real scale (splits ≥ cores) this is a no-op — no extra shuffle."""
+    """Round-robin repartition when the input has fewer partitions than
+    cores, so map-side hashing is not serialized on one task; a no-op at
+    real scale (no extra shuffle)."""
     p = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(p) if df.rdd.getNumPartitions() < p else df
+
+
+def _words(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, w) — the substrate's word array (module docstring)."""
+    return _widen(df).select(
+        F.col(id_col).alias("id"),
+        F.coalesce(F.split(F.lower(F.col(text_col)), r"\s+"),
+                   F.array().cast("array<string>")).alias("w"))
+
+
+def _elements(arr: str) -> Column:
+    """A substrate array column as a generator input:
+    ``F.explode(_elements("sharr"))`` (module docstring)."""
+    return F.array_compact(arr)
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -57,46 +112,18 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                   n: int = 3, dedupe: bool = True) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle).
-
-    Documents with fewer than ``n`` words yield no shingles. Construction is
-    ``arrays_zip`` of ``n`` shifted slices of the words array — O(words) per
-    row. (A ``transform(sequence(...), i -> slice(words, i+1, n))`` lambda
-    captures the ``split`` expression and re-evaluates it PER ELEMENT —
-    O(words²), ~23 s for a single 10k-word document. The split is kept
-    behind its own projection so CollapseProject cannot inline the
-    expensive producer into the multi-reference consumer.)
-
-    Dedupe is per-document, so it runs as ``array_distinct`` on the
-    in-row shingle array BEFORE the explode — a map-side O(shingles²/row
-    worst, hash-set in practice) pass instead of the former corpus-wide
-    ``distinct``, which shuffled the ENTIRE exploded shingle stream once
-    per call (guide §2.4: remove the shuffle outright; row-identical
-    output, verified exceptAll-empty both ways at sf0.1).
-    """
+    """Word n-gram shingles per document: (id, shingle), distinct per
+    document unless ``dedupe=False``. Documents with fewer than ``n``
+    words yield no shingles."""
     return (shingle_arrays(df, id_col, text_col, n, dedupe)
-            .select("id", F.explode("sharr").alias("shingle")))
+            .select("id", F.explode(_elements("sharr")).alias("shingle")))
 
 
 def shingle_arrays(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", n: int = 3,
                    dedupe: bool = True) -> DataFrame:
     """(id, sharr: array<string>) — each document's word ``n``-gram
-    shingles as ONE in-row array (``word_shingles`` is its explode).
-    Exposed so consumers that only need per-document scalars — shingle
-    counts (jaccard/containment sizes, ppjoin's s), bottom-k sketches,
-    has-any-shingle flags — can compute them as map-side projections of
-    the array instead of exploding + re-aggregating the corpus-wide
-    stream (guide §2.3/§2.4: the aggregate undoes the explode; skip
-    both).
-
-    ``_widen`` guards the under-split case (a small single-file table
-    scans as ONE split, which would serialize the whole shingle chain on
-    one core now that no early ``distinct`` exchange fans it out) — the
-    minhash_signatures discipline; a no-op at real scale."""
-    words_df = _widen(df).select(
-        F.col(id_col).alias("id"),
-        F.split(F.lower(F.col(text_col)), r"\s+").alias("w"))
+    shingles as one in-row array (module docstring)."""
     m = F.size("w") - n + 1  # number of shingles when >= 1
     zipped = F.arrays_zip(*[F.slice("w", i + 1, m) for i in range(n)])
     shingle = F.when(
@@ -106,51 +133,45 @@ def shingle_arrays(df: DataFrame, id_col: str = "doc_id",
     ).otherwise(F.array().cast("array<string>"))
     if dedupe:
         shingle = F.array_distinct(shingle)
-    return words_df.select("id", shingle.alias("sharr"))
+    return _words(df, id_col, text_col).select("id", shingle.alias("sharr"))
+
+
+def _capped_pair_counts(df: DataFrame, id_col: str, text_col: str, n: int,
+                        max_shingle_freq: int, pair: Column,
+                        sizes: bool = True) -> DataFrame:
+    """(id_a, id_b, [n_a, n_b,] n_common) for the document pairs that
+    satisfy ``pair`` and share at least one distinct shingle in at most
+    ``max_shingle_freq`` documents (module docstring)."""
+    sh = shingle_arrays(df, id_col, text_col, n).select(
+        "id", F.size("sharr").cast("long").alias("n_sh"),
+        F.explode(_elements("sharr")).alias("shingle"))
+    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
+    sh_f = sh.join(freq.filter(F.col("f") <= max_shingle_freq), "shingle")
+
+    def side(s):
+        n_sh = [F.col("n_sh").alias(f"n_{s}")] if sizes else []
+        return sh_f.select(F.col("id").alias(f"id_{s}"), *n_sh, "shingle")
+
+    keys = ["id_a", "id_b"] + (["n_a", "n_b"] if sizes else [])
+    return (side("a").join(side("b"), "shingle")
+            .filter(pair)
+            .groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("n_common")))
 
 
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                   n: int = 3, threshold: float = 0.8,
                   max_shingle_freq: int = 1000) -> DataFrame:
-    """All document pairs with word-``n``-gram Jaccard ≥ threshold.
-
-    explode → drop ultra-frequent shingles (stop-shingles produce quadratic
-    candidates without adding signal) → self-join on shingle → count common
-    shingles → Jaccard = common / (|A| + |B| - common).
-    """
-    # deliberately NOT cached: the exploded shingle set is ~n× the input
-    # size, so pinning it in executor memory is the scale-wrong choice —
-    # recomputing it (scan + split, narrow and codegen'd) for the three
-    # consumers is cheaper than spilling a 10×-input cache at 100 TB
-    # per-doc set sizes RIDE the shingle stream (a map-side projection of
-    # the in-row array) and travel through the pair join as extra
-    # grouping keys — no sizes table, no post-aggregation joins, and the
-    # shingle-build chain is evaluated exactly twice (once under the freq
-    # exchange, once on the join's probe side, itself shared by both pair
-    # sides via exchange reuse). The former shape paid either a
-    # corpus-wide distinct shuffle (pre-r7) or two un-reusable
-    # projection-side re-evaluations (guide §2.3/§2.4).
-    arrs = shingle_arrays(df, id_col, text_col, n)
-    sh_s = arrs.select("id", F.size("sharr").cast("long").alias("n_sh"),
-                       F.explode("sharr").alias("shingle"))
-    freq = sh_s.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
-    sh_f = sh_s.join(freq.filter(F.col("f") <= max_shingle_freq), "shingle")
-
-    a = sh_f.select(F.col("id").alias("id_a"),
-                    F.col("n_sh").alias("n_a"), "shingle")
-    b = sh_f.select(F.col("id").alias("id_b"),
-                    F.col("n_sh").alias("n_b"), "shingle")
-    common = (a.join(b, "shingle")
-               .filter(F.col("id_a") < F.col("id_b"))
-               .groupBy("id_a", "id_b", "n_a", "n_b")
-               .agg(F.count(F.lit(1)).alias("n_common")))
-    out = (common
-           .withColumn("jaccard",
-                       F.col("n_common") /
-                       (F.col("n_a") + F.col("n_b") - F.col("n_common")))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
-    return out
+    """All document pairs with word-``n``-gram Jaccard ≥ threshold:
+    common / (|A| + |B| - common), common counted without stop-shingles."""
+    common = _capped_pair_counts(df, id_col, text_col, n, max_shingle_freq,
+                                 F.col("id_a") < F.col("id_b"))
+    return (common
+            .withColumn("jaccard",
+                        F.col("n_common") /
+                        (F.col("n_a") + F.col("n_b") - F.col("n_common")))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 def cooccurrence_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -168,17 +189,9 @@ def cooccurrence_pairs(df: DataFrame, id_col: str = "doc_id",
     so the candidate count is Σ f² over f <= cap, linear in corpus size
     for fixed cap.
     """
-    sh = word_shingles(df, id_col, text_col, n)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
-    sh_f = sh.join(freq.filter(F.col("f") <= max_shingle_freq), "shingle")
-    a = sh_f.select(F.col("id").alias("id_a"), "shingle")
-    b = sh_f.select(F.col("id").alias("id_b"), "shingle")
-    return (a.join(b, "shingle")
-             .filter(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count(F.lit(1)).alias("n_common"))
-             .filter(F.col("n_common") >= min_common)
-             .select("id_a", "id_b", "n_common"))
+    return (_capped_pair_counts(df, id_col, text_col, n, max_shingle_freq,
+                                F.col("id_a") < F.col("id_b"), sizes=False)
+            .filter(F.col("n_common") >= min_common))
 
 
 def containment_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -202,23 +215,8 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
     corpus). Output: directed (id_a, id_b, n_common, n_a, containment)
     with id_a != id_b and containment(A→B) >= threshold.
     """
-    # sizes ride the pair join as grouping keys (jaccard_pairs note);
-    # the min_shingles membership filters on BOTH endpoints become
-    # post-aggregation predicates on the carried sizes — identical rows
-    # (the former inner joins only ever dropped sub-min documents)
-    arrs = shingle_arrays(df, id_col, text_col, n)
-    sh_s = arrs.select("id", F.size("sharr").cast("long").alias("n_sh"),
-                       F.explode("sharr").alias("shingle"))
-    freq = sh_s.groupBy("shingle").agg(F.count(F.lit(1)).alias("f"))
-    sh_f = sh_s.join(freq.filter(F.col("f") <= max_shingle_freq), "shingle")
-    a = sh_f.select(F.col("id").alias("id_a"),
-                    F.col("n_sh").alias("n_a"), "shingle")
-    b = sh_f.select(F.col("id").alias("id_b"),
-                    F.col("n_sh").alias("n_b"), "shingle")
-    common = (a.join(b, "shingle")
-               .filter(F.col("id_a") != F.col("id_b"))
-               .groupBy("id_a", "id_b", "n_a", "n_b")
-               .agg(F.count(F.lit(1)).alias("n_common")))
+    common = _capped_pair_counts(df, id_col, text_col, n, max_shingle_freq,
+                                 F.col("id_a") != F.col("id_b"))
     return (common
             .filter((F.col("n_a") >= min_shingles)
                     & (F.col("n_b") >= min_shingles))
@@ -247,8 +245,8 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     exchange — a ``distinct`` first puts the hashing after a shuffle that
     AQE coalesces to ONE partition on small inputs (7-16 s single-task vs
     ~1 s wide, measured at sf0.1)."""
-    sh = word_shingles(_widen(df), id_col, text_col, n, dedupe=False)
-    x = _md5_int60(F.col("shingle")) % F.lit(MERSENNE_P)
+    sh = word_shingles(df, id_col, text_col, n, dedupe=False)
+    x = md5_int60_col(F.col("shingle")) % F.lit(MERSENNE_P)
     mins = [F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MERSENNE_P))
              .alias(f"m{i}")
             for i, (a, b) in enumerate(minhash_params(num_hashes))]
@@ -269,6 +267,19 @@ def minhash_band_buckets(sig: DataFrame, bands: int = 16,
         F.md5(F.concat_ws(",", F.transform(
             F.slice("sig", F.col("band") * rows_per_band + 1, rows_per_band),
             lambda x: x.cast("string")))).alias("bucket"))
+
+
+def _band_candidates(sig: DataFrame, bands: int,
+                     rows_per_band: int) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b: the signature pairs that share
+    a band bucket in at least one band — an equality shuffle on
+    (band, bucket), never a crossJoin."""
+    banded = minhash_band_buckets(sig, bands, rows_per_band)
+    a = banded.select(F.col("id").alias("id_a"), "band", "bucket")
+    b = banded.select(F.col("id").alias("id_b"), "band", "bucket")
+    return (a.join(b, ["band", "bucket"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b").distinct())
 
 
 def incremental_dedup(new_docs: DataFrame, corpus_docs: DataFrame,
@@ -311,24 +322,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     Jaccard (fraction of matching minhashes ≥ threshold).
 
     bands × rows-per-band = num_hashes; a pair becomes a candidate if any
-    band's sub-signature hashes identically. The band join is an equality
-    shuffle — near-linear, no O(n²) crossJoin.
+    band's sub-signature hashes identically.
     """
-    rows_per_band = num_hashes // bands
     # signatures are compact (num_hashes longs/doc) but expensive to build
     # (wide min-agg over exploded shingles) and reused three times —
     # persist for the single materializing pass, release before returning
     with Pins() as p:
         sig = p.pin(minhash_signatures(df, id_col, text_col, n, num_hashes))
-
-        banded = minhash_band_buckets(sig, bands, rows_per_band)
-
-        a = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-        b = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-        cand = (a.join(b, ["band", "bucket"])
-                 .filter(F.col("id_a") < F.col("id_b"))
-                 .select("id_a", "id_b").distinct())
-
+        cand = _band_candidates(sig, bands, num_hashes // bands)
         sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
         sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
         return p.result(
@@ -341,7 +342,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
             .select("id_a", "id_b", "est_jaccard"))
 
 
-SIMHASH_BITS = 60  # md5-60bit token hash domain (see _md5_int60)
+SIMHASH_BITS = 60  # md5-60bit token hash domain (hashfamily.md5_int60_col)
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -354,10 +355,10 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     with map-side partial combine. ~2.6× faster than exploding per-bit
     rows through the aggregate (token_count×bits rows), and md5 keeps an
     exact DuckDB oracle twin."""
-    tok = (_widen(df).select(F.col(id_col).alias("id"),
-                     F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok"))
-             .filter(F.col("tok") != "")
-             .withColumn("x", _md5_int60(F.col("tok"))))
+    tok = (_words(df, id_col, text_col)
+           .select("id", F.explode(_elements("w")).alias("tok"))
+           .filter(F.col("tok") != "")
+           .withColumn("x", md5_int60_col(F.col("tok"))))
     votes = [F.sum(F.when(F.shiftright(F.col("x"), b).bitwiseAND(F.lit(1)) == 1,
                           F.lit(1)).otherwise(F.lit(-1))).alias(f"b{b}")
              for b in range(bits)]
@@ -598,7 +599,7 @@ def dup_span_stats(df: DataFrame, id_col: str = "doc_id",
     # reusable measured SLOWER, its extra aggregate level outweighing
     # the shared scan.)
     arrs = shingle_arrays(df, id_col, text_col, n, dedupe=False)
-    inst = arrs.select("id", F.explode("sharr").alias("shingle"))
+    inst = arrs.select("id", F.explode(_elements("sharr")).alias("shingle"))
     docfreq = (arrs.select(F.explode(F.array_distinct("sharr"))
                            .alias("shingle"))
                .groupBy("shingle").agg(F.count(F.lit(1)).alias("docs")))
@@ -623,8 +624,8 @@ def remove_dup_spans(df: DataFrame, id_col: str = "doc_id",
     first occurrence of boilerplate survives once corpus-wide; every
     repeat is excised in place rather than the whole document dying.
 
-    Tokenization matches word_shingles (lower + ``\\s+`` split); output
-    text is the normalized words joined by single spaces. Output:
+    Tokenization is the substrate's word array; output text is the
+    normalized words joined by single spaces. Output:
     (doc_id, text, n_words, n_words_dropped) — one row per input doc,
     empty text when everything was covered.
 
@@ -637,19 +638,9 @@ def remove_dup_spans(df: DataFrame, id_col: str = "doc_id",
     costs 2 rows, not ``n``; the prefix-sum window and the reassembly
     aggregate are both per-doc (bounded by document length) and share
     one hash partitioning on id."""
-    from pyspark.sql.window import Window
-
-    words = df.select(
-        F.col(id_col).alias("id"),
-        F.split(F.lower(F.col(text_col)), r"\s+").alias("w"))
-    m = F.size("w") - n + 1
-    zipped = F.arrays_zip(*[F.slice("w", i + 1, m) for i in range(n)])
-    shingle = F.when(
-        F.size("w") >= n,
-        F.transform(zipped,
-                    lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]))
-    ).otherwise(F.array().cast("array<string>"))
-    inst = (words.select("id", F.posexplode(shingle).alias("pos0", "shingle"))
+    inst = (shingle_arrays(df, id_col, text_col, n, dedupe=False)
+            .select("id", F.posexplode(_elements("sharr"))
+                    .alias("pos0", "shingle"))
             .select("id", (F.col("pos0") + 1).alias("pos"), "shingle"))
 
     agg = inst.groupBy("shingle").agg(
@@ -667,7 +658,8 @@ def remove_dup_spans(df: DataFrame, id_col: str = "doc_id",
                                          F.lit(-1).alias("d")))
               .groupBy("id", "p").agg(F.sum("d").alias("d")))
 
-    wpos = (words.select("id", F.posexplode("w").alias("p0", "word"))
+    wpos = (_words(df, id_col, text_col)
+            .select("id", F.posexplode(_elements("w")).alias("p0", "word"))
             .select("id", (F.col("p0") + 1).alias("p"), "word"))
     cov_w = Window.partitionBy("id").orderBy("p")
     covered = (wpos.join(deltas, ["id", "p"], "left")
@@ -765,7 +757,7 @@ def winnow_fingerprints(df: DataFrame, id_col: str = "doc_id",
     that grows with corpus size). The
     keys array stays behind its own projection so CollapseProject
     cannot inline the md5 chain into the per-window slice lambda (the
-    word_shingles discipline).
+    word-array discipline in the module docstring).
 
     Output: (doc_id, pos, fp), one row per selected fingerprint; docs
     shorter than k+w−1 chars emit nothing (no full window).
@@ -834,24 +826,20 @@ def ppjoin_pairs(df: DataFrame, id_col: str = "doc_id",
     Output: (id_a, id_b, n_a, n_b, n_common, jacc_e6), pairs id_a < id_b.
     """
     arrs = shingle_arrays(df, id_col, text_col, n)
-    sh = arrs.select("id", F.explode("sharr").alias("shingle"))
+    sh = arrs.select("id", F.explode(_elements("sharr")).alias("shingle"))
     # the vocab-sized frequency table is consumed by all the tok
     # pipelines below (prefix sides + verify sides): persist IT — one
-    # corpus aggregate instead of four — while the corpus-sized shingle
-    # stream itself stays recompute-not-cache (the jaccard_pairs
-    # discipline); released once the result is materialized. The papers'
-    # global frequency order needs NO dense rank (and therefore NO global
-    # window anywhere): (f, shingle) is already a total order, the
-    # per-document prefix positions come from an id-partitioned window
-    # over it, and both the candidate and verify joins key on the
-    # shingle itself. The per-document set size rides the explode as a
-    # map-side array projection (jaccard_pairs note) — formerly a second
-    # unordered window pass over the id partition.
+    # corpus aggregate instead of four — released once the result is
+    # materialized. The papers' global frequency order needs NO dense
+    # rank (and therefore NO global window anywhere): (f, shingle) is
+    # already a total order, the per-document prefix positions come from
+    # an id-partitioned window over it, and both the candidate and verify
+    # joins key on the shingle itself.
     with Pins() as p:
         freq = p.pin(sh.groupBy("shingle")
                      .agg(F.count(F.lit(1)).alias("f")))
         tok = (arrs.select("id", F.size("sharr").cast("long").alias("s"),
-                           F.explode("sharr").alias("shingle"))
+                           F.explode(_elements("sharr")).alias("shingle"))
                .join(freq, "shingle").select("id", "shingle", "f", "s"))
         wid = Window.partitionBy("id")
         tokp = tok.withColumn("pos", F.row_number().over(
@@ -990,14 +978,7 @@ def blocking_quality(df: DataFrame, id_col: str = "doc_id",
         truth = p.pin(jaccard_pairs(df, id_col, text_col, n, threshold)
                       .select("id_a", "id_b"))
         sig = p.pin(minhash_signatures(df, id_col, text_col, n, num_hashes))
-        banded = minhash_band_buckets(sig, bands, num_hashes // bands)
-        a = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-        b = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-        cand = (a.join(b, ["band", "bucket"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b").distinct())
-        # shingle-bearing doc count straight off the in-row arrays — no
-        # explode, no corpus-wide distinct (guide §2.4)
+        cand = _band_candidates(sig, bands, num_hashes // bands)
         nd = (shingle_arrays(df, id_col, text_col, n)
               .filter(F.size("sharr") > 0)
               .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))

@@ -642,10 +642,10 @@ def reshard_stats(docs: DataFrame, id_col: str = "doc_id",
     Output: one row (n_docs, moved_mod, moved_hrw, frac_mod_e6,
     frac_hrw_e6), fractions as x·1e6 div n_docs.
     """
-    from bella_domify_spark.ops.dedup import _md5_int60
+    from bella_domify_spark.ops.hashfamily import md5_int60_col
     sid = F.col(id_col).cast("string")
-    hid = _md5_int60(sid)
-    hs = [_md5_int60(F.concat(sid, F.lit(f":{s}")))
+    hid = md5_int60_col(sid)
+    hs = [md5_int60_col(F.concat(sid, F.lit(f":{s}")))
           for s in range(n_from + 1)]
     per = docs.select(
         (F.pmod(hid, F.lit(n_from))
@@ -685,9 +685,9 @@ def shard_balance(docs: DataFrame, id_col: str = "doc_id",
 
     Output: (shard, n_docs, n_bytes, skew_e6).
     """
-    from bella_domify_spark.ops.dedup import _md5_int60
+    from bella_domify_spark.ops.hashfamily import md5_int60_col
     per = (docs.filter(F.col(weight_col).isNotNull())
-           .groupBy(F.pmod(_md5_int60(F.col(id_col).cast("string")),
+           .groupBy(F.pmod(md5_int60_col(F.col(id_col).cast("string")),
                            F.lit(n_shards)).alias("shard"))
            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
                 F.sum(weight_col).cast("long").alias("n_bytes")))

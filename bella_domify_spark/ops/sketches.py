@@ -315,15 +315,15 @@ def bottomk_estimate(docs: DataFrame, k: int = BK_K,
 
     Output: (id_a, id_b, true_e6, est_e6, err_e6).
     """
-    from bella_domify_spark.ops.dedup import (_md5_int60, jaccard_pairs,
-                                              shingle_arrays)
+    from bella_domify_spark.ops.dedup import jaccard_pairs, shingle_arrays
+    from bella_domify_spark.ops.hashfamily import md5_int60_col
     # per-doc bottom-k straight off the in-row shingle array:
     # sort_array + slice replaces the former per-doc ordered window over
     # the whole exploded hash stream (guide §2.4 — the k smallest VALUES
     # are the same either way; ties held duplicates in both shapes)
     bk = (shingle_arrays(docs)
           .select("id", F.explode(F.slice(F.array_sort(
-              F.transform("sharr", lambda g: _md5_int60(g))), 1, k))
+              F.transform("sharr", md5_int60_col)), 1, k))
               .alias("hv")))
     with Pins() as p:
         tp = p.pin(jaccard_pairs(docs, threshold=threshold)

@@ -291,6 +291,22 @@ def sample_stratified(df: DataFrame, rates: dict, strata_col: str = "lang",
     return df.filter(bucket < threshold)
 
 
+def _bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, w1, w2): every adjacent pair of non-empty words of each
+    document (lower + ``\\s+`` split)."""
+    # producers behind their own projection: a transform() capturing
+    # split() would re-evaluate it per element
+    words = df.select(F.col(id_col).alias("id"),
+                      F.split(F.lower(F.col(text_col)), r"\s+").alias("a"))
+    n = F.size("a")
+    return (words.select(
+        "id", F.explode(F.arrays_zip(
+            F.slice("a", 1, n - 1).alias("w1"),
+            F.slice("a", 2, n - 1).alias("w2"))).alias("z"))
+        .select("id", F.col("z.w1").alias("w1"), F.col("z.w2").alias("w2"))
+        .filter((F.col("w1") != "") & (F.col("w2") != "")))
+
+
 def bigram_surprisal(df: DataFrame, id_col: str = "doc_id",
                      text_col: str = "text") -> DataFrame:
     """Perplexity-proxy quality signal: per-document mean conditional
@@ -314,17 +330,7 @@ def bigram_surprisal(df: DataFrame, id_col: str = "doc_id",
     aggregate-sized input) and pre-joins into it, so the big stream never
     shuffles a second time. Docs under two words have no bigrams and drop
     out (both engines agree)."""
-    words = df.select(F.col(id_col).alias("id"),
-                      F.split(F.lower(F.col(text_col)), r"\s+").alias("a"))
-    # producers behind their own projection: a transform() capturing
-    # split() would re-evaluate it per element
-    n = F.size("a")
-    bi = (words.select(
-        "id", F.explode(F.arrays_zip(
-            F.slice("a", 1, n - 1).alias("w1"),
-            F.slice("a", 2, n - 1).alias("w2"))).alias("z"))
-        .select("id", F.col("z.w1").alias("w1"), F.col("z.w2").alias("w2"))
-        .filter((F.col("w1") != "") & (F.col("w2") != "")))
+    bi = _bigrams(df, id_col, text_col)
     c12 = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     stats = c12.join(c1, ["w1"]).select(
@@ -620,25 +626,14 @@ def cross_surprisal(new_docs: DataFrame, corpus_docs: DataFrame,
     aggregate-sized inputs, and the batch-side join is batch-sized (a
     production pipeline materializes the corpus LM once and reuses it
     every batch)."""
-    def bigrams(df):
-        words = df.select(F.col(id_col).alias("id"),
-                          F.split(F.lower(F.col(text_col)), r"\s+").alias("a"))
-        n = F.size("a")
-        return (words.select(
-            "id", F.explode(F.arrays_zip(
-                F.slice("a", 1, n - 1).alias("w1"),
-                F.slice("a", 2, n - 1).alias("w2"))).alias("z"))
-            .select("id", F.col("z.w1").alias("w1"), F.col("z.w2").alias("w2"))
-            .filter((F.col("w1") != "") & (F.col("w2") != "")))
-
-    ref = bigrams(corpus_docs)
+    ref = _bigrams(corpus_docs, id_col, text_col)
     c12 = ref.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = (ref.select(F.col("w1").alias("w"))
              .unionAll(ref.select(F.col("w2").alias("w")))
              .agg(F.countDistinct("w").alias("v")))
 
-    nb = bigrams(new_docs)
+    nb = _bigrams(new_docs, id_col, text_col)
     scored = (nb.join(c12, ["w1", "w2"], "left")
               .join(c1, ["w1"], "left")
               .crossJoin(F.broadcast(vocab))

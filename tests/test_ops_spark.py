@@ -3289,13 +3289,13 @@ class TestRound6Session8Ops:
         import pyspark.sql.functions as F
 
         from bella_domify_spark.engine.manifest import run_resumable
-        from bella_domify_spark.ops.dedup import _md5_int60
+        from bella_domify_spark.ops.hashfamily import md5_int60_col
 
         df = spark.createDataFrame(
             [(str(i), 0, f"text {i}") for i in range(20)],
             "conv_id string, turn_idx int, text string")
-        bexpr = F.pmod(_md5_int60(F.concat_ws(":", F.col("conv_id"),
-                                              F.col("turn_idx"))),
+        bexpr = F.pmod(md5_int60_col(F.concat_ws(":", F.col("conv_id"),
+                                                 F.col("turn_idx"))),
                        F.lit(4))
         out = str(tmp_path / "mstats")
         first = run_resumable(df, out, n_buckets=4, bucket_expr=bexpr)
@@ -3317,12 +3317,12 @@ class TestRound6Session8Ops:
 
         from bella_domify_spark.engine.manifest import (lookup_turn,
                                                         run_resumable)
-        from bella_domify_spark.ops.dedup import _md5_int60
+        from bella_domify_spark.ops.hashfamily import md5_int60_col
 
         df = spark.createDataFrame(
             [(str(i), 0, f"text {i}") for i in range(8)],
             "conv_id string, turn_idx int, text string")
-        bexpr = F.pmod(_md5_int60(F.col("conv_id")), F.lit(4))
+        bexpr = F.pmod(md5_int60_col(F.col("conv_id")), F.lit(4))
         out = str(tmp_path / "custom")
         run_resumable(df, out, n_buckets=4, bucket_expr=bexpr)
         with pytest.raises(ValueError, match="bucket_expr"):
@@ -3571,3 +3571,56 @@ class TestRound6Session8Ops:
         assert got[("A", "C")] == (1, expected_ac)
         assert got[("B", "C")] == (1, expected_ac)
         assert 0 < expected_ac < LN2_E12
+
+
+class TestStopShingleCap:
+    # 3-gram shingles; "x y z" occurs in three documents, so a cap of 2
+    # makes it a stop-shingle. Docs 0 and 1 also share "p q r" and
+    # "q r s"; doc 2 shares only "x y z" with them.
+    ROWS = [(0, "p q r s x y z"),        # 5 shingles
+            (1, "p q r s t x y z"),      # 6 shingles
+            (2, "x y z m n o")]          # 4 shingles
+
+    @pytest.fixture(scope="class")
+    def capdocs(self, spark):
+        return spark.createDataFrame(self.ROWS, ["doc_id", "text"])
+
+    def test_jaccard_pairs_drop_the_stop_shingle(self, capdocs):
+        from bella_domify_spark.ops.dedup import jaccard_pairs
+
+        def pairs(cap):
+            return {(r["id_a"], r["id_b"]): r["jaccard"]
+                    for r in jaccard_pairs(capdocs, threshold=0.0,
+                                           max_shingle_freq=cap).collect()}
+
+        # capped: only (0, 1) survives, with n_common 2 over the
+        # uncapped set sizes (5 + 6 - 2)
+        assert pairs(2) == {(0, 1): 2 / 9}
+        assert pairs(3) == {(0, 1): 3 / 8, (0, 2): 1 / 8, (1, 2): 1 / 9}
+
+    def test_containment_pairs_drop_the_stop_shingle(self, capdocs):
+        from bella_domify_spark.ops.dedup import containment_pairs
+
+        def pairs(cap):
+            return {(r["id_a"], r["id_b"]): (r["n_common"], r["n_a"],
+                                             r["containment"])
+                    for r in containment_pairs(
+                        capdocs, threshold=0.0, max_shingle_freq=cap,
+                        min_shingles=1).collect()}
+
+        assert pairs(2) == {(0, 1): (2, 5, 2 / 5), (1, 0): (2, 6, 2 / 6)}
+        got = pairs(3)
+        assert got[(0, 1)] == (3, 5, 3 / 5)
+        assert got[(2, 0)] == (1, 4, 1 / 4)
+
+    def test_cooccurrence_pairs_drop_the_stop_shingle(self, capdocs):
+        from bella_domify_spark.ops.dedup import cooccurrence_pairs
+
+        def pairs(cap):
+            return {(r["id_a"], r["id_b"]): r["n_common"]
+                    for r in cooccurrence_pairs(
+                        capdocs, min_common=1,
+                        max_shingle_freq=cap).collect()}
+
+        assert pairs(2) == {(0, 1): 2}
+        assert pairs(3) == {(0, 1): 3, (0, 2): 1, (1, 2): 1}

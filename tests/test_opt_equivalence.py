@@ -106,8 +106,8 @@ class TestKmeansLiteralCentroids:
 class TestWinnowInRow:
     def test_matches_windowed_reference(self, spark, docs):
         from bella_domify_spark.ops.dedup import (WINNOW_K, WINNOW_W,
-                                                  _md5_int60,
                                                   winnow_fingerprints)
+        from bella_domify_spark.ops.hashfamily import md5_int60_col
         k, w = WINNOW_K, WINNOW_W
         fast = winnow_fingerprints(docs)
         # reference: the pre-optimization explode + ordered-window plan
@@ -120,7 +120,7 @@ class TestWinnowInRow:
             f"transform(sequence(1, length(t) - {k} + 1),"
             f" i -> named_struct('pos', cast(i as bigint),"
             f"                   'g', substring(t, i, {k})))")).alias("pg"))
-        h31 = _md5_int60(F.col("pg.g")) % F.lit(2 ** 31)
+        h31 = md5_int60_col(F.col("pg.g")) % F.lit(2 ** 31)
         keyed = pg.select(
             "id", F.col("pg.pos").alias("pos"),
             (h31 * F.lit(2 ** 31)
