@@ -251,3 +251,31 @@ class DomTree:
 
     def to_json(self) -> str:
         return fastjson.dumps(self.to_dict())
+
+
+# ----- the to_dict form built directly (no Node/TextBlock objects) -----
+#
+# The txt and markdown trees hold only one-span text blocks with the
+# [0,1,0,1] placeholder bbox on page 0, so their ``to_dict`` output is
+# fully determined by each node's text, layout type and position; these
+# build that output for the parsers that emit it without a tree.
+
+def root_dict() -> dict:
+    return {"order_num": None, "element": None, "child": []}
+
+
+def text_node_dict(text: str, layout_type: str) -> dict:
+    return {"order_num": None,
+            "element": {"block_type": "text", "layout_type": layout_type,
+                        "bbox": [0.0, 1.0, 0.0, 1.0], "text": text,
+                        "page_num": [0]},
+            "child": []}
+
+
+def add_child_dict(parent: dict, child: dict) -> None:
+    """Attach ``child`` and number it as ``assign_order_numbers`` does:
+    "1", "2" under the root, "2.1" under "2"."""
+    kids = parent["child"]
+    kids.append(child)
+    order = parent["order_num"]
+    child["order_num"] = f"{order}.{len(kids)}" if order else str(len(kids))

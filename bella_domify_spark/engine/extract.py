@@ -32,9 +32,10 @@ record struct) the only batch-parse body. Two plans run it:
 
 The remaining UDFs serve single-format queries: ``_text_udf`` builds the
 text → text ones, ``standard_udf`` emits the StandardDomTree wire protocol
-through the same router, and ``layout_udf`` the flat layout model
-(``parsers.layout_flat`` keeps its own router: it builds a different output
-model).
+from each format's tree builder (``_STANDARD_PARSERS``: the extraction
+path skips the tree for plaintext and markdown), and ``layout_udf`` the
+flat layout model (``parsers.layout_flat`` keeps its own router: it builds
+a different output model).
 """
 
 from __future__ import annotations
@@ -48,10 +49,11 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
 from bella_domify_spark.parsers import (csvlike, docxlike, htmllike, markdown,
-                                        pptxlike, xlsxlike)
+                                        pptxlike, txt, xlsxlike)
 from bella_domify_spark.parsers.dispatch import (
-    FMT_EMPTY, FMT_HTML, FMT_PPTX, FMT_TXT, PARSE_RESULT_ARROW, PARSERS,
-    detect_format, parse_batch)
+    FMT_DOCX, FMT_EMPTY, FMT_HTML, FMT_MD, FMT_PDF, FMT_PPTX, FMT_TXT,
+    FMT_XLSX, PARSE_RESULT_ARROW, detect_format, parse_batch)
+from bella_domify_spark.parsers.pdflike import pipeline as pdfpipe
 
 PARSE_RESULT_TYPE = from_arrow_type(PARSE_RESULT_ARROW)
 
@@ -121,11 +123,13 @@ STANDARD_RESULT_TYPE = T.StructType([
     T.StructField("tokens", T.IntegerType()),
 ])
 
-# the StandardDomTree of html and pptx payloads is built from the txt
-# converter's tree, as the reference sends .html through it
-# (parse_manager.py:90-95)
-_STANDARD_PARSERS = {**PARSERS, FMT_HTML: PARSERS[FMT_TXT],
-                     FMT_PPTX: PARSERS[FMT_TXT]}
+# fmt -> the tree the StandardDomTree is built from. The StandardDomTree
+# of html and pptx payloads is built from the txt converter's tree, as the
+# reference sends .html through it (parse_manager.py:90-95)
+_STANDARD_PARSERS = {FMT_PDF: pdfpipe.parse, FMT_XLSX: xlsxlike.build_domtree,
+                     FMT_DOCX: docxlike.parse, FMT_MD: markdown.parse,
+                     FMT_TXT: txt.parse, FMT_HTML: txt.parse,
+                     FMT_PPTX: txt.parse}
 
 
 @F.pandas_udf(STANDARD_RESULT_TYPE)
@@ -141,7 +145,7 @@ def standard_udf(texts: pd.Series) -> pd.DataFrame:
             out.append({"standard_json": None, "tokens": 0})
             continue
         try:
-            std = to_standard(_STANDARD_PARSERS[fmt](t, None)[0])
+            std = to_standard(_STANDARD_PARSERS[fmt](t))
             out.append({"standard_json": json.dumps(std, ensure_ascii=False,
                                                     separators=(",", ":")),
                         "tokens": std["root"]["tokens"]})

@@ -112,9 +112,14 @@ def recognize_list(text: str) -> Tuple[Optional[Union[int, str]], Optional[str]]
             m = _COMPILED[index].match(text)
             if m:
                 return index + 1, m.group(0)
-        m = _COMPILED[_TOC_IDX].match(text)
-        if m:
-            return _TOC_IDX + 1, m.group(0)
+        # the TOC-leader rule ends in "\d+\s*$", so it can only match when
+        # the last non-space char is a \d (str.rstrip and the regex \s
+        # agree on what is space); skipping it otherwise also skips its
+        # quadratic backtracking on long lines
+        if _DIGIT.match(text.rstrip()[-1:]):
+            m = _COMPILED[_TOC_IDX].match(text)
+            if m:
+                return _TOC_IDX + 1, m.group(0)
         m = _SPECIAL_START.match(text)
         if m:
             ch = m.group(0)

@@ -6,9 +6,6 @@ Parity: /root/reference/doc_parser/layout_parser/csv_parser.py
   trailing "\\n".
 - ``markdown_parse`` (:43-64): GFM pipe table with a "---" separator row
   inserted after the header.
-
-The domtree path treats the normalized CSV text like plain text (the
-reference routes csv → txt converter for domtree, services/parse_manager.py).
 """
 
 from __future__ import annotations
@@ -16,9 +13,6 @@ from __future__ import annotations
 import csv
 import io
 from typing import List
-
-from bella_domify_spark.core.tree import DomTree
-from bella_domify_spark.parsers import txt as txt_parser
 
 
 def _records(text: str) -> List[List[str]]:
@@ -42,7 +36,3 @@ def to_markdown_table(text: str) -> str:
             lines.append("| " + " | ".join(["---"] * len(record)) + " |")
         lines.append("| " + " | ".join(record) + " |")
     return "\n".join(lines)
-
-
-def parse(text: str) -> DomTree:
-    return txt_parser.parse(normalize_text(text))

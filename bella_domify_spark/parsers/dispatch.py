@@ -18,8 +18,19 @@ Equality semantics per format:
 - docx-like  → XML walk tree; text via the layout semantics
 - pdf-like   → full layout pipeline; text = tree markdown flatten
 
-``PARSERS`` is the one format router; ``parse_payload`` is a pure function
-str → dict over it, and ``parse_batch`` maps it over an Arrow batch — the
+``PARSERS`` is the one format router: each entry maps
+``(text, image_provider)`` to the record's ``(domtree_json,
+extracted_text)``. The tree formats build their DomTree and go through
+``tree_record`` (``to_json`` + ``to_markdown``). Plaintext, markdown and
+pptx-like emit the two strings directly (``txt.record``,
+``markdown.record``): their trees hold only one-span placeholder blocks,
+so the JSON is fixed by each node's text, layout type and position, and
+the txt flatten is ``text + "\\n\\n"`` with a "# " prefix for a List. The
+Span/Line/TextBlock tree cost more than the rest of their parse; it stays
+as ``txt.parse`` / ``markdown.parse``, the specification the emitters are
+tested against (tests/test_direct_emit.py) and what ``standard_udf`` and
+``md_flatten_udf`` use. ``parse_payload`` is a pure function str → dict
+over ``PARSERS``, and ``parse_batch`` maps it over an Arrow batch — the
 whole Python body of every extraction crossing (no per-row Python UDFs).
 """
 
@@ -69,8 +80,9 @@ def detect_format(text: Optional[str]) -> str:
     return FMT_TXT
 
 
-def _with_markdown(tree) -> tuple:
-    return tree, tree.to_markdown()
+def tree_record(tree) -> tuple:
+    """A tree format's ``(domtree_json, extracted_text)``."""
+    return tree.to_json(), tree.to_markdown()
 
 
 def _pptx(text: str, image_provider) -> tuple:
@@ -78,41 +90,41 @@ def _pptx(text: str, image_provider) -> tuple:
     # exists); extracted text = the layout flat text, tree = one node
     # carrying it
     extracted = pptxlike.flat_text(text)
-    return txt.parse(extracted), extracted
+    return txt.record(extracted)[0], extracted
 
 
 def _markdown(text: str, image_provider) -> tuple:
     # equality target: txt semantics; tree: block tokenizer
-    extracted = txt.extract_text(text)
-    return markdown.parse(text), extracted
+    extracted = txt.flatten(text, txt.layout_type(text))
+    return markdown.record(text), extracted
 
 
-#: The one format router: fmt -> fn(text, image_provider) -> (DomTree,
-#: extracted_text). ``image_provider`` (a providers.ImageStorageProvider)
-#: enables the Figure link/OCR path for pdf-format payloads — None keeps
-#: placeholders, like the reference with no parser_context provider bound.
-#: htmllike is an ENGINE EXTENSION: the reference routes .html through its
-#: txt converter (parse_manager.py:90-95); the north star asks for true
-#: boilerplate strip + DOM heuristics — see htmllike.py.
+#: The one format router: fmt -> fn(text, image_provider) ->
+#: (domtree_json, extracted_text). ``image_provider`` (a
+#: providers.ImageStorageProvider) enables the Figure link/OCR path for
+#: pdf-format payloads — None keeps placeholders, like the reference with
+#: no parser_context provider bound. htmllike is an ENGINE EXTENSION: the
+#: reference routes .html through its txt converter (parse_manager.py:90-95);
+#: the north star asks for true boilerplate strip + DOM heuristics — see
+#: htmllike.py.
 PARSERS = {
-    FMT_PDF: lambda t, p: _with_markdown(pdfpipe.parse(t, image_provider=p)),
-    FMT_XLSX: lambda t, p: _with_markdown(xlsxlike.build_domtree(t)),
+    FMT_PDF: lambda t, p: tree_record(pdfpipe.parse(t, image_provider=p)),
+    FMT_XLSX: lambda t, p: tree_record(xlsxlike.build_domtree(t)),
     FMT_PPTX: _pptx,
-    FMT_DOCX: lambda t, p: _with_markdown(docxlike.parse(t)),
-    FMT_HTML: lambda t, p: _with_markdown(htmllike.parse(t)),
+    FMT_DOCX: lambda t, p: tree_record(docxlike.parse(t)),
+    FMT_HTML: lambda t, p: tree_record(htmllike.parse(t)),
     FMT_MD: _markdown,
-    FMT_TXT: lambda t, p: _with_markdown(txt.parse(t)),
+    FMT_TXT: lambda t, p: txt.record(t),
 }
 
 
 def parse_record(fmt: str, parse, text: str, image_provider=None) -> dict:
-    """Run one ``parse(text, image_provider) -> (tree, extracted_text)``
-    into an extraction record. Never raises: errors are reported in the
-    ``status`` column (per-page error isolation analogue, reference
-    pdf/converter.py:160-166)."""
+    """Run one ``parse(text, image_provider) -> (domtree_json,
+    extracted_text)`` into an extraction record. Never raises: errors are
+    reported in the ``status`` column (per-page error isolation analogue,
+    reference pdf/converter.py:160-166)."""
     try:
-        tree, extracted = parse(text, image_provider)
-        dom_json = tree.to_json()
+        dom_json, extracted = parse(text, image_provider)
         n_nodes = dom_json.count('"element":{') if dom_json else 0
         return {"extracted_text": extracted, "domtree_json": dom_json,
                 "fmt": fmt, "n_nodes": n_nodes, "status": "ok"}

@@ -13,15 +13,21 @@ paragraph), ``parse(text).to_markdown() == canonical(text)`` under the
 reference flatten (tree.py). Pipe tables and ordered lists keep their raw
 text as Text nodes so stability holds for them too; their parsed structure is
 exposed via node metadata instead of the Table layout type.
+
+``parse`` builds the tree; ``record`` emits the same tree's JSON from
+``build``'s rule without it (the extraction path, pinned to ``parse`` by
+tests/test_direct_emit.py).
 """
 
 from __future__ import annotations
 
 import re
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
 from bella_domify_spark.core.blocks import Line, Span, TextBlock
-from bella_domify_spark.core.tree import DomTree, Node
+from bella_domify_spark.core.tree import (DomTree, Node, add_child_dict,
+                                          root_dict, text_node_dict)
+from bella_domify_spark.functions import fastjson
 
 _ATX = re.compile(r"^(#{1,6})\s+(.*?)\s*#*\s*$")
 _FENCE = re.compile(r"^(```+|~~~+)\s*(\S*)\s*$")
@@ -31,20 +37,16 @@ _TABLE_ROW = re.compile(r"^\s*\|.*\|\s*$")
 _TABLE_SEP = re.compile(r"^\s*\|(\s*:?-{1,}:?\s*\|)+\s*$")
 
 
-def _block(text: str, override: Optional[str] = None, is_title: bool = False,
-           suppress_list: bool = True) -> TextBlock:
-    span = Span(text=text, bbox=(0.0, 1.0, 0.0, 1.0))
-    line = Line(spans=[span], bbox=(0.0, 1.0, 0.0, 1.0),
-                list_type=0 if suppress_list else None)
-    return TextBlock(lines=[line], page_num=[0], is_title=is_title,
-                     layout_override=override)
-
-
-def _bullet_block(item_text: str) -> TextBlock:
-    span = Span(text=item_text, bbox=(0.0, 1.0, 0.0, 1.0))
-    # explicit unordered list type: the bullet marker char
-    line = Line(spans=[span], bbox=(0.0, 1.0, 0.0, 1.0), list_type="-", list_tag="- ")
-    return TextBlock(lines=[line], page_num=[0])
+def _node(text: str, layout: str) -> Node:
+    # list_type 0 keeps list recognition off; a bullet's explicit
+    # unordered list type is its marker char
+    bullet = layout == "List"
+    line = Line(spans=[Span(text=text, bbox=(0.0, 1.0, 0.0, 1.0))],
+                bbox=(0.0, 1.0, 0.0, 1.0), list_type="-" if bullet else 0,
+                list_tag="- " if bullet else None)
+    return Node(TextBlock(lines=[line], page_num=[0],
+                          is_title=layout == "Title",
+                          layout_override="Code" if layout == "Code" else None))
 
 
 def tokenize(text: str) -> List[Tuple[str, str]]:
@@ -125,40 +127,51 @@ def parse_table_rows(raw: str) -> List[List[str]]:
     return rows
 
 
-def parse(text: str) -> DomTree:
-    tree = DomTree()
-    stack: List[Tuple[int, Node]] = [(0, tree.root)]  # (heading level, node)
-    last_para: Optional[Node] = None
+def build(text: str, root, node, add_child):
+    """The one heading-stack and bullet-attachment rule over ``tokenize``,
+    shared by ``parse`` (Node trees) and ``record`` (``to_dict``-form
+    dicts): ``node(text, layout_type)`` makes a node and
+    ``add_child(parent, child)`` attaches it. Returns ``root``."""
+    stack = [(0, root)]  # (heading level, node)
+    last_para = None
 
     for kind, payload in tokenize(text):
         if kind.startswith("heading"):
             level = int(kind[len("heading"):])
             while stack[-1][0] >= level:
                 stack.pop()
-            node = Node(_block(payload, is_title=True))
-            stack[-1][1].add_child(node)
-            stack.append((level, node))
+            child = node(payload, "Title")
+            add_child(stack[-1][1], child)
+            stack.append((level, child))
             last_para = None
         elif kind == "bullet":
-            node = Node(_bullet_block(payload))
             if last_para is not None:
-                last_para.add_child(node)
+                add_child(last_para, node(payload, "List"))
             else:
                 # no preceding paragraph: keep raw for flatten stability
-                node = Node(_block("- " + payload))
-                stack[-1][1].add_child(node)
+                add_child(stack[-1][1], node("- " + payload, "Text"))
         elif kind == "code":
-            node = Node(_block(payload, override="Code"))
-            stack[-1][1].add_child(node)
+            add_child(stack[-1][1], node(payload, "Code"))
             last_para = None
         elif kind == "table":
             # raw text node typed "Table" via metadata-free Text (stability);
             # structure available via parse_table_rows for consumers
-            node = Node(_block(payload))
-            stack[-1][1].add_child(node)
+            add_child(stack[-1][1], node(payload, "Text"))
             last_para = None
         else:  # paragraph / ordered
-            node = Node(_block(payload))
-            stack[-1][1].add_child(node)
-            last_para = node
+            child = node(payload, "Text")
+            add_child(stack[-1][1], child)
+            last_para = child
+    return root
+
+
+def parse(text: str) -> DomTree:
+    tree = DomTree()
+    build(text, tree.root, _node, Node.add_child)
     return tree
+
+
+def record(text: str) -> str:
+    """``parse(text).to_json()`` without the tree."""
+    return fastjson.dumps({"root": build(text, root_dict(), text_node_dict,
+                                         add_child_dict)})

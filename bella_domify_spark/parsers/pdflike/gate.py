@@ -70,12 +70,12 @@ def gate_record_stream(doc_id: int) -> dict:
     parse_stream_tables + merged stream cells) oracle-visible instead of
     pytest-only. The record (node count, error status) is built by the
     same dispatch.parse_record as every turn's."""
-    from bella_domify_spark.parsers.dispatch import FMT_PDF, parse_record
+    from bella_domify_spark.parsers.dispatch import (FMT_PDF, parse_record,
+                                                     tree_record)
     from bella_domify_spark.parsers.pdflike import pipeline as pdfpipe
 
     def parse(text: str, _image_provider) -> tuple:
-        tree = pdfpipe.parse(text, parse_stream_table=True)
-        return tree, tree.to_markdown()
+        return tree_record(pdfpipe.parse(text, parse_stream_table=True))
 
     return _gate_row(doc_id, parse_record(FMT_PDF, parse,
                                           gate_payload_stream(doc_id)))

@@ -13,24 +13,30 @@ from bella_domify_spark.parsers.dispatch import detect_format, parse_payload
 
 
 class TestTxt:
+    # the plaintext emitter's flatten (txt.record; the tree path it is
+    # pinned to is tests/test_direct_emit.py)
+    @staticmethod
+    def _flat(text):
+        return txt.record(text)[1]
+
     def test_plain_paragraph(self):
-        assert txt.extract_text("Hello world.") == "Hello world.\n\n"
+        assert self._flat("Hello world.") == "Hello world.\n\n"
 
     def test_multiline_kept_verbatim(self):
         s = "line one\nline two\n\nline three"
-        assert txt.extract_text(s) == s + "\n\n"
+        assert self._flat(s) == s + "\n\n"
 
     def test_list_quirk_ordered(self):
         # whole content is ONE line; "1. " matches the ordered-list regex →
         # List node at level 1 → "# " prefix (reference flatten quirk)
-        assert txt.extract_text("1. first item") == "# 1. first item\n\n"
+        assert self._flat("1. first item") == "# 1. first item\n\n"
 
     def test_list_quirk_special_char(self):
-        assert txt.extract_text("• bullet") == "# • bullet\n\n"
+        assert self._flat("• bullet") == "# • bullet\n\n"
 
     def test_hash_is_special_char(self):
         # '#' is not in the excluded punctuation set → unordered list marker
-        assert txt.extract_text("# Title") == "# # Title\n\n"
+        assert self._flat("# Title") == "# # Title\n\n"
 
 
 class TestMarkdownTokenizer:
