@@ -201,7 +201,6 @@ def apply_parse(df: DataFrame, ocr_provider: Optional[str] = None) -> DataFrame:
 def extract_transcripts(df: DataFrame,
                         partitions: Optional[int] = None,
                         ordered: bool = False,
-                        repartition: bool = True,
                         ocr_provider: Optional[str] = None) -> DataFrame:
     """Run the extraction over a transcript DataFrame.
 
@@ -211,16 +210,13 @@ def extract_transcripts(df: DataFrame,
             partitions).
         ordered: re-range-partition the output by (conv_id, turn_idx) for a
             globally ordered sink (adds the second shuffle).
-        repartition: disable to parse with scan-native partitioning (useful
-            when the source is already well distributed — saves the shuffle).
     """
-    if repartition:
-        df = with_salt(df)
-        if partitions:
-            df = df.repartition(partitions, "conv_id", "salt")
-        else:
-            df = df.repartition("conv_id", "salt")
-        df = df.drop("salt")
+    df = with_salt(df)
+    if partitions:
+        df = df.repartition(partitions, "conv_id", "salt")
+    else:
+        df = df.repartition("conv_id", "salt")
+    df = df.drop("salt")
 
     out = apply_parse(df, ocr_provider)
     if ordered:

@@ -19,15 +19,18 @@ Design (plain PySpark, no custom Catalyst):
   batches into one ``pyarrow.parquet.ParquetWriter`` per bucket and commit
   each bucket atomically with a manifest JSON carrying lineage + metrics
   (run id, rows, bytes, wall ms).
-- **Storage-agnostic**: ``out_dir`` may be a plain local path or any URI
-  pyarrow.fs can open (``file://``, ``s3://``, ``hdfs://``) — required for a
-  real multi-executor cluster where executors do not share the driver's
-  disk. Commit protocol per bucket: data file first, manifest LAST — the
-  manifest's existence IS the commit marker. On rename-capable filesystems
-  (plain local paths, ``file://``, ``hdfs://``) the manifest write is
-  additionally tmp+move so a mid-write crash can never leave a truncated
-  manifest under its committed name; on object stores a single-object PUT
-  is already atomic, and rename doesn't exist.
+- **Storage-agnostic, one path**: ``out_dir`` may be a plain local path
+  or any URI pyarrow.fs can open (``file://``, ``s3://``, ``hdfs://``) —
+  required for a real multi-executor cluster where executors do not share
+  the driver's disk. A plain path is opened as ``LocalFileSystem``, so
+  every layout is written and listed by the same ``pyarrow.fs`` calls.
+  Commit protocol per bucket: data file first, manifest LAST — the
+  manifest's existence IS the commit marker. The scheme picks the commit:
+  on rename-capable filesystems (plain paths, ``file://``, ``hdfs://``)
+  both files are written under an attempt-unique temp name and moved into
+  place, so a mid-write crash can never leave a truncated file under its
+  committed name; on object stores a single-object PUT is already atomic,
+  and rename doesn't exist.
 - At 100 TB: buckets are the idempotent commit granule (the same role as
   Iceberg file groups); n_buckets scales with data volume, parallelism P
   scales with the cluster — they are independent knobs.
@@ -58,16 +61,18 @@ _SUMMARY_TYPE = T.StructType([
 class BucketStore:
     """Minimal filesystem facade for the sink + resume bookkeeping.
 
-    Local paths (no scheme) use os/file APIs with tmp+rename commits; URI
-    paths route through ``pyarrow.fs.FileSystem.from_uri`` so the same code
-    runs against file://, hdfs:// or s3:// from every executor. Constructed
-    from a string, so shipping it into a task only captures ``out_dir``.
+    Every ``out_dir`` goes through one ``pyarrow.fs`` filesystem: a plain
+    path is ``LocalFileSystem`` (scheme ``file``), a URI is whatever
+    ``pyarrow.fs.FileSystem.from_uri`` opens (file://, hdfs://, s3://), so
+    local runs execute the same calls as a cluster writing to an object
+    store. Only the commit policy depends on the scheme. Constructed from
+    a string, so shipping it into a task only captures ``out_dir``.
     """
 
     #: URI schemes whose filesystems support an (effectively) atomic rename;
-    #: manifests there get the same tmp+move commit as plain local paths.
-    #: Object stores (s3, gcs, ...) are excluded — a single-object PUT is
-    #: already atomic and "rename" would be a non-atomic copy+delete.
+    #: files there are committed by attempt-unique temp + move. Object
+    #: stores (s3, gcs, ...) are excluded — a single-object PUT is already
+    #: atomic and "rename" would be a non-atomic copy+delete.
     RENAME_SCHEMES = ("file", "local", "hdfs", "viewfs")
 
     #: subset of RENAME_SCHEMES with POSIX replace-on-rename semantics.
@@ -76,16 +81,15 @@ class BucketStore:
     POSIX_RENAME_SCHEMES = ("file", "local")
 
     def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        self.is_uri = "://" in out_dir
-        if self.is_uri:
-            import pyarrow.fs as pafs
+        import pyarrow.fs as pafs
 
+        self.out_dir = out_dir
+        if "://" in out_dir:
             self.scheme = out_dir.split("://", 1)[0].lower()
             self.fs, self.base = pafs.FileSystem.from_uri(out_dir)
         else:
-            self.scheme = None
-            self.fs, self.base = None, out_dir
+            self.scheme = "file"
+            self.fs, self.base = pafs.LocalFileSystem(), os.path.abspath(out_dir)
 
     # -- paths -----------------------------------------------------------
     def path(self, *parts: str) -> str:
@@ -93,10 +97,14 @@ class BucketStore:
 
     # -- setup / listing ---------------------------------------------------
     def makedirs(self) -> None:
-        if self.is_uri:
-            self.fs.create_dir(self.path("_manifests"), recursive=True)
-        else:
-            os.makedirs(self.path("_manifests"), exist_ok=True)
+        self.fs.create_dir(self.path("_manifests"), recursive=True)
+
+    def _list(self, *parts: str) -> list:
+        """FileInfos directly under ``parts`` (empty if it is missing)."""
+        import pyarrow.fs as pafs
+
+        return self.fs.get_file_info(
+            pafs.FileSelector(self.path(*parts), allow_not_found=True))
 
     def clean_tmp(self) -> int:
         """Remove orphaned attempt-temp files (crashed/killed attempts
@@ -104,47 +112,20 @@ class BucketStore:
         Called at job start, when no attempt can be live — never during a
         run. Returns the number removed."""
         removed = 0
-        for sub in ("", "_manifests"):
-            d = self.path(sub) if sub else self.base.rstrip("/")
-            if self.is_uri:
-                import pyarrow.fs as pafs
-
-                infos = self.fs.get_file_info(
-                    pafs.FileSelector(d, allow_not_found=True))
-                for i in infos:
-                    if i.base_name.endswith(".tmp"):
-                        self.fs.delete_file(i.path)
-                        removed += 1
-            elif os.path.isdir(d):
-                for n in os.listdir(d):
-                    if n.endswith(".tmp"):
-                        os.remove(os.path.join(d, n))
-                        removed += 1
+        for sub in ((), ("_manifests",)):
+            for i in self._list(*sub):
+                if i.base_name.endswith(".tmp"):
+                    self.fs.delete_file(i.path)
+                    removed += 1
         return removed
 
     def manifest_names(self) -> List[str]:
-        mdir = self.path("_manifests")
-        if self.is_uri:
-            import pyarrow.fs as pafs
-
-            try:
-                infos = self.fs.get_file_info(
-                    pafs.FileSelector(mdir, allow_not_found=True))
-            except FileNotFoundError:
-                return []
-            return sorted(i.base_name for i in infos
-                          if i.base_name.endswith(".json"))
-        if not os.path.isdir(mdir):
-            return []
-        return sorted(n for n in os.listdir(mdir) if n.endswith(".json"))
+        return sorted(i.base_name for i in self._list("_manifests")
+                      if i.base_name.endswith(".json"))
 
     def read_json(self, *parts: str) -> dict:
-        p = self.path(*parts)
-        if self.is_uri:
-            with self.fs.open_input_stream(p) as f:
-                return json.loads(f.read().decode())
-        with open(p) as f:
-            return json.load(f)
+        with self.fs.open_input_stream(self.path(*parts)) as f:
+            return json.loads(f.read().decode())
 
     # -- sink-side writes --------------------------------------------------
     @staticmethod
@@ -160,15 +141,15 @@ class BucketStore:
         return f"{final}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
 
     def _move_commit(self, tmp: str, final: str) -> None:
-        """Commit ``tmp`` to ``final`` on a rename-capable URI filesystem.
+        """Commit ``tmp`` to ``final`` on a rename-capable filesystem.
 
-        POSIX-rename schemes (file://) replace an existing destination, so
-        a plain move is the whole protocol. HDFS/viewfs rename does NOT
-        overwrite: after a crash that committed a bucket data file but not
-        its manifest, the resume run re-parses the bucket and its
-        re-commit move fails on the orphan — accept the existing complete
-        ``final`` as committed (every attempt writes the same
-        deterministic content, so whichever attempt landed is equally
+        POSIX-rename schemes (plain paths, file://) replace an existing
+        destination, so a plain move is the whole protocol. HDFS/viewfs
+        rename does NOT overwrite: after a crash that committed a bucket
+        data file but not its manifest, the resume run re-parses the
+        bucket and its re-commit move fails on the orphan — accept the
+        existing complete ``final`` as committed (every attempt writes the
+        same deterministic content, so whichever attempt landed is equally
         valid) and drop our temp. Never delete ``final`` first: a
         speculative attempt killed between a delete and its move would
         permanently destroy an already-committed bucket whose manifest
@@ -195,48 +176,32 @@ class BucketStore:
         import pyarrow.parquet as pq
 
         final = self.path(rel)
-        if self.is_uri:
-            if self.scheme in self.RENAME_SCHEMES:
-                # file://, hdfs://: streams interleave in place, so commit
-                # via attempt-unique temp + move exactly like write_json
-                tmp = self._tmp_name(final)
-                writer = pq.ParquetWriter(tmp, schema, filesystem=self.fs)
-                return writer, lambda: self._move_commit(tmp, final)
-            # object stores: single-PUT on close is atomic and concurrent
-            # attempts each PUT a complete object (last write wins whole)
-            writer = pq.ParquetWriter(final, schema, filesystem=self.fs)
-            return writer, lambda: None
-        tmp = self._tmp_name(final)
-        writer = pq.ParquetWriter(tmp, schema)
-        return writer, lambda: os.replace(tmp, final)
+        if self.scheme in self.RENAME_SCHEMES:
+            # streams interleave in place, so commit via attempt-unique
+            # temp + move exactly like write_json
+            tmp = self._tmp_name(final)
+            writer = pq.ParquetWriter(tmp, schema, filesystem=self.fs)
+            return writer, lambda: self._move_commit(tmp, final)
+        # object stores: single-PUT on close is atomic and concurrent
+        # attempts each PUT a complete object (last write wins whole)
+        writer = pq.ParquetWriter(final, schema, filesystem=self.fs)
+        return writer, lambda: None
 
     def write_json(self, rel: str, obj: dict) -> None:
         """Commit a manifest. The manifest's *existence* marks the bucket
         done, so a truncated manifest must never appear under its final
-        name: rename-capable filesystems (local, file://, hdfs://) get
-        tmp+move; object stores rely on single-PUT atomicity."""
-        p = self.path(rel)
-        data = json.dumps(obj).encode()
-        if self.is_uri:
-            if self.scheme in self.RENAME_SCHEMES:
-                tmp = self._tmp_name(p)
-                with self.fs.open_output_stream(tmp) as f:
-                    f.write(data)
-                self._move_commit(tmp, p)
-            else:
-                with self.fs.open_output_stream(p) as f:
-                    f.write(data)
-            return
-        tmp = self._tmp_name(p)
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, p)
+        name: rename-capable filesystems get tmp+move; object stores rely
+        on single-PUT atomicity."""
+        final = self.path(rel)
+        rename = self.scheme in self.RENAME_SCHEMES
+        target = self._tmp_name(final) if rename else final
+        with self.fs.open_output_stream(target) as f:
+            f.write(json.dumps(obj).encode())
+        if rename:
+            self._move_commit(target, final)
 
     def file_size(self, rel: str) -> int:
-        p = self.path(rel)
-        if self.is_uri:
-            return int(self.fs.get_file_info(p).size)
-        return os.path.getsize(p)
+        return int(self.fs.get_file_info(self.path(rel)).size)
 
 
 def completed_buckets(out_dir: str) -> set:
@@ -473,8 +438,10 @@ def lookup_turn(spark, out_dir: str, conv_id, turn_idx) -> DataFrame:
     manifests = read_manifests(out_dir)
     if not manifests:
         raise FileNotFoundError(f"no committed buckets under {out_dir}")
-    sample = store.path(manifests[0]["file"])
-    schema = spark.read.parquet(sample).schema
+    # Spark reads paths under out_dir itself: store.path is relative to
+    # the filesystem and drops an object store's scheme (s3://b/out -> b/out)
+    root = out_dir.rstrip("/") + "/"
+    schema = spark.read.parquet(root + manifests[0]["file"]).schema
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     one = spark.range(1).select(
         F.lit(conv_id).cast(types["conv_id"]).alias("conv_id"),
@@ -483,7 +450,7 @@ def lookup_turn(spark, out_dir: str, conv_id, turn_idx) -> DataFrame:
     fname = f"bucket-{pid:05d}.parquet"
     if not any(m["file"] == fname for m in manifests):
         return spark.createDataFrame([], schema)
-    return (spark.read.parquet(store.path(fname))
+    return (spark.read.parquet(root + fname)
             .filter((F.col("conv_id") == F.lit(conv_id).cast(types["conv_id"]))
                     & (F.col("turn_idx")
                        == F.lit(turn_idx).cast(types["turn_idx"]))))

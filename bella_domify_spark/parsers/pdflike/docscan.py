@@ -1,10 +1,11 @@
-"""Document-level scans: header/footer frequency vote, cover page, catalog.
+"""Document-level scans: header/footer frequency vote, catalog.
 
 Parity: /root/reference/doc_parser/dom_parser/parsers/pdf/page/Pages.py
 - header/footer vote: :251-401 (candidate zone → de-numbered text + IoU>0.7
   position frequency vote, rate ≥0.4 & count ≥2, first 30 pages, then strip
   the whole confirmed zone)
-- cover: :145-187 (≥3 pages, ≤200 chars, blank ratio >50%)
+- cover: :145-187 is not ported — its result only drops page 1 when the
+  reference's ``filter_cover`` is on, and production leaves it off
 - catalog: :190-248 (dot-leader regex on ≥3 consecutive physical rows within
   the first max(3, n/3) pages; title "目录/目次" row prepended)
 - title marking from catalog titles: :135-142
@@ -30,7 +31,6 @@ from bella_domify_spark.parsers.pdflike.glyphdoc import RawPage, Stroke
 
 FREQUENCY_THRESHOLD_TIMES = 2
 FREQUENCY_THRESHOLD_RATE = 0.4
-PAGE_MARGIN = 90
 
 
 def _most_common_insertion_ordered(values):
@@ -137,38 +137,12 @@ def identify_header_footer(pages: List[RawPage]) -> None:
         p.lines = [l for l in p.lines if not l.is_header and not l.is_footer]
 
 
-def detect_cover(pages: List[RawPage]) -> bool:
-    """Blank-ratio cover detection on page 1 (Pages.py:145-187). Marks lines
-    with a Cover tag; caller may drop the page when filtering is on."""
-    if not pages:
-        return False
-    first = pages[0]
-    first_page_size = max(first.width - PAGE_MARGIN * 2, 0) * max(first.height - PAGE_MARGIN * 2, 0)
-    if first_page_size == 0:
-        return False
-    blank = first_page_size
-    raw_text = ""
-    for line in first.lines:
-        if line.is_header or line.is_footer:
-            continue
-        w = max(line.bbox[2] - line.bbox[0], 0)
-        h = max(line.bbox[3] - line.bbox[1], 0)
-        if line.image_spans:
-            if (w * h) / first_page_size < 0.6:
-                blank -= w * h
-            continue
-        blank -= w * h
-        raw_text += line.raw_text
-    return (len(pages) >= 3 and len(raw_text) <= 200
-            and (first_page_size == 0.0 or blank / first_page_size > 0.5))
-
-
-def parse_catalog(pages: List[RawPage], filter_catalog: bool = True) -> List[str]:
+def parse_catalog(pages: List[RawPage]) -> List[str]:
     """TOC detection (Pages.py:190-248): scan physical rows in the first
     max(3, n/3) pages; ≥3 consecutive dot-leader rows (or one row matching
     ≥3 times) confirm a catalog; the preceding "目录/目次" row is included.
-    Returns extracted catalog titles (leader+page-number stripped) and, when
-    filtering, removes catalog lines from the pages."""
+    Returns extracted catalog titles (leader+page-number stripped) and
+    removes catalog lines from the pages."""
     search_range = max(3, len(pages) // 3)
     rows = []
     for p in pages[:search_range]:
@@ -201,10 +175,9 @@ def parse_catalog(pages: List[RawPage], filter_catalog: bool = True) -> List[str
             row[0].is_catalog = True
             item = "".join(l.text for l in row)
             titles.append(re.sub(CATALOG_ITEM_PATTERN, '', squash_spaces(item.strip())))
-        if filter_catalog:
-            catalog_ids = {id(l) for row in catalog_rows for l in row}
-            for p in pages[:search_range]:
-                p.lines = [l for l in p.lines if id(l) not in catalog_ids]
+        catalog_ids = {id(l) for row in catalog_rows for l in row}
+        for p in pages[:search_range]:
+            p.lines = [l for l in p.lines if id(l) not in catalog_ids]
     return titles
 
 

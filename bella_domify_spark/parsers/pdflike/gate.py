@@ -198,26 +198,8 @@ def gate_extract_standard(docs: DataFrame) -> DataFrame:
     return _extract_with(docs, gate_record_standard, schema=STD_IMG_SCHEMA)
 
 
-def expected_frame(max_doc_id: int) -> "pd.DataFrame":  # noqa: F821
-    """Driver side: expected rows for ids [0, max_doc_id)."""
+def expected_frame(record_fn, max_doc_id: int) -> "pd.DataFrame":  # noqa: F821
+    """Driver side: ``record_fn``'s expected rows for ids [0, max_doc_id)."""
     import pandas as pd
 
-    return pd.DataFrame([gate_record(i) for i in range(max_doc_id)])
-
-
-def expected_frame_stream(max_doc_id: int) -> "pd.DataFrame":  # noqa: F821
-    import pandas as pd
-
-    return pd.DataFrame([gate_record_stream(i) for i in range(max_doc_id)])
-
-
-def expected_frame_ocr(max_doc_id: int) -> "pd.DataFrame":  # noqa: F821
-    import pandas as pd
-
-    return pd.DataFrame([gate_record_ocr(i) for i in range(max_doc_id)])
-
-
-def expected_frame_standard(max_doc_id: int) -> "pd.DataFrame":  # noqa: F821
-    import pandas as pd
-
-    return pd.DataFrame([gate_record_standard(i) for i in range(max_doc_id)])
+    return pd.DataFrame([record_fn(i) for i in range(max_doc_id)])

@@ -5,7 +5,7 @@ Stage order mirrors the reference converter
 page/Pages.py:37-132 → layout/Blocks.py:265-294 → domtree_parser.py:57-164):
 
 1. restore raw pages (glyphdoc.load: clean-up + list recognition)
-2. document scans: header/footer vote → cover → catalog → title marking
+2. document scans: header/footer vote → catalog → title marking
 3. per page: lattice tables → column split → reading-order sort →
    paragraph join → paragraph split → title identification → hyphen fixup
 4. cross-page relations (captions/references/continuations)
@@ -36,9 +36,8 @@ from bella_domify_spark.parsers.pdflike.paragraphs import (
 from bella_domify_spark.parsers.pdflike.treebuild import build_tree, construct_relations
 
 
-def parse(payload: str, filter_catalog: bool = True, filter_cover: bool = False,
-          parse_stream_table: bool = False,
-          image_provider=None, user: str = "") -> DomTree:
+def parse(payload: str, parse_stream_table: bool = False,
+          image_provider=None) -> DomTree:
     """``parse_stream_table`` defaults False like production
     (reference services/parse_manager.py:572-578). ``image_provider``
     (a providers.ImageStorageProvider) enables the Figure link/OCR path;
@@ -50,13 +49,9 @@ def parse(payload: str, filter_catalog: bool = True, filter_cover: bool = False,
 
     # ---- document-level scans (P7-P10) ----
     docscan.identify_header_footer(pages)
-    is_cover = docscan.detect_cover(pages)
-    if is_cover and filter_cover:
-        pages = pages[1:]
     # PDF-bookmark titles seed the list; the parsed TOC extends it
     # (Pages.py:46 + :126-127)
-    catalog_titles = bookmark_titles + \
-        docscan.parse_catalog(pages, filter_catalog=filter_catalog)
+    catalog_titles = bookmark_titles + docscan.parse_catalog(pages)
     docscan.mark_titles_from_catalog(pages, catalog_titles)
 
     # ---- page-level layout (P11-P23) ----
@@ -117,7 +112,7 @@ def parse(payload: str, filter_catalog: bool = True, filter_cover: bool = False,
                     meta = dict(span.image_meta or {})
                     meta.setdefault("bbox", list(span.bbox))
                     b.image_link, b.image_ocr_result = \
-                        image_provider.get_pic_url_and_ocr(meta, user)
+                        image_provider.get_pic_url_and_ocr(meta)
 
     # ---- relations + tree (R1-R4, T1-T4) ----
     construct_relations(pages_blocks)

@@ -1,13 +1,13 @@
 """Cross-page relation tests: paragraph continuation (R4), table
-continuation (R3), cover detection (P8), caption/reference linking (R1/R2).
+continuation (R3), caption/reference linking (R1/R2).
 
 Reference: extend/page/PageExtend.py:15-29, TextBlockExtend.py:155-163,
-TableBlockExtend.py:77-138, page/Pages.py:145-187.
+TableBlockExtend.py:77-138.
 """
 
 import json
 
-from bella_domify_spark.parsers.pdflike import docscan, glyphdoc, pipeline
+from bella_domify_spark.parsers.pdflike import pipeline
 
 
 def _line(text, x0, y0, w=None, size=10.5, flags=0):
@@ -139,29 +139,3 @@ class TestCaptionReference:
         # text node IS the caption (domtree_parser.py:89-91)
         assert caption.element.layout_type == "TableName"
         assert [c.element.layout_type for c in caption.child] == ["Table"]
-
-
-class TestCover:
-    def _doc(self, first_page_text_len):
-        text = "t" * first_page_text_len
-        pages = [
-            glyphdoc.RawPage(width=612.0, height=792.0, page_id=0),
-            glyphdoc.RawPage(width=612.0, height=792.0, page_id=1),
-            glyphdoc.RawPage(width=612.0, height=792.0, page_id=2),
-        ]
-        from tests.test_pdflike import mk_line
-
-        pages[0].lines = [mk_line(text, 200, 300, w=100, h=20)]
-        pages[1].lines = [mk_line("body " * 30, 72, 100)]
-        pages[2].lines = [mk_line("body " * 30, 72, 100)]
-        return pages
-
-    def test_sparse_first_page_is_cover(self):
-        assert docscan.detect_cover(self._doc(50)) is True
-
-    def test_dense_text_not_cover(self):
-        assert docscan.detect_cover(self._doc(500)) is False
-
-    def test_two_pages_never_cover(self):
-        pages = self._doc(50)[:2]
-        assert docscan.detect_cover(pages) is False

@@ -298,8 +298,7 @@ class TestEndToEnd:
             "tool": [""] * 3,
             "ts": pd.to_datetime(["2026-01-01"] * 3).astype("datetime64[us]"),
         })
-        res = extract_transcripts(spark.createDataFrame(bad),
-                                  repartition=False).collect()
+        res = extract_transcripts(spark.createDataFrame(bad)).collect()
         by_idx = {r["turn_idx"]: r for r in res}
         assert by_idx[0]["status"].startswith("error:")
         assert by_idx[1]["status"] == "skipped_empty"

@@ -5,11 +5,11 @@ import pandas as pd
 
 from bella_domify_spark.parsers.pdflike.gate import (
     expected_frame,
-    expected_frame_stream,
     gate_extract,
     gate_extract_stream,
     gate_payload,
     gate_payload_stream,
+    gate_record,
     gate_record_stream,
 )
 
@@ -49,7 +49,7 @@ def test_gate_extract_matches_expected(spark):
     docs = spark.createDataFrame([(i,) for i in range(40)], ["doc_id"])
     got = (gate_extract(docs).toPandas()
            .sort_values("doc_id").reset_index(drop=True))
-    exp = expected_frame(40)
+    exp = expected_frame(gate_record, 40)
     assert (got["status"] == "ok").all()
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
@@ -92,6 +92,6 @@ def test_stream_gate_extract_matches_expected(spark):
     docs = spark.createDataFrame([(i,) for i in range(40)], ["doc_id"])
     got = (gate_extract_stream(docs).toPandas()
            .sort_values("doc_id").reset_index(drop=True))
-    exp = expected_frame_stream(40)
+    exp = expected_frame(gate_record_stream, 40)
     assert (got["status"] == "ok").all()
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)

@@ -58,3 +58,39 @@ class TestLookupTurn:
 
         with pytest.raises(FileNotFoundError):
             lookup_turn(spark, str(tmp_path), "conv0", 0)
+
+    def test_object_store_layout_reads_under_the_uri(self, spark, sink_out,
+                                                     monkeypatch):
+        # pyarrow's from_uri returns a filesystem-relative path
+        # (s3://bucket/out -> bucket/out); Spark must still read the layout
+        # under the URI it was given, scheme included
+        import pyarrow.fs as pafs
+        from pyspark.sql import DataFrameReader
+
+        from bella_domify_spark.engine.manifest import lookup_turn
+
+        out, corpus_path = sink_out
+        uri = "s3://bucket/out"
+
+        class StubFileSystem:
+            @staticmethod
+            def from_uri(u):
+                assert u == uri
+                return pafs.LocalFileSystem(), out
+
+        monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
+        reads = []
+        real_parquet = DataFrameReader.parquet
+
+        def spy(reader, *paths, **kw):
+            reads.extend(paths)
+            return real_parquet(reader, *[p.replace(uri, out, 1)
+                                          for p in paths], **kw)
+
+        k = (spark.read.parquet(corpus_path).select("conv_id", "turn_idx")
+             .orderBy("conv_id", "turn_idx").first())
+        monkeypatch.setattr(DataFrameReader, "parquet", spy)
+        rows = lookup_turn(spark, uri, k["conv_id"], k["turn_idx"]).collect()
+        assert reads and all(p.startswith(uri + "/") for p in reads), reads
+        assert [(r["conv_id"], r["turn_idx"]) for r in rows] == \
+            [(k["conv_id"], k["turn_idx"])]

@@ -238,7 +238,7 @@ class TestCatalog:  # P9/P10, page/Pages.py:190-248
             mk_line("Body text starts here", 72, 200),
         ]
         pages = [mk_page(lines)]
-        titles = docscan.parse_catalog(pages, filter_catalog=True)
+        titles = docscan.parse_catalog(pages)
         # the "目录" row is inserted into catalog_blocks (Pages.py:209-218)
         # and therefore contributes a title and is stripped with the rest
         assert titles == ["目录", "Introduction", "Methods", "Results"]

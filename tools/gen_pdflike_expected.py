@@ -1,6 +1,5 @@
-"""Regenerate fixtures/pdflike_expected.parquet AND
-fixtures/pdflike_stream_expected.parquet — the pinned oracle tables for the
-``pdflike_extract`` and ``pdflike_extract_stream`` correctness-gate queries.
+"""Regenerate fixtures/pdflike{,_stream,_ocr,_standard}_expected.parquet —
+the pinned oracle tables for the pdflike correctness-gate queries.
 
 Run after ANY change to the pdflike parse semantics or synthdocs generator:
 
@@ -18,29 +17,26 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "fixtures", "pdflike_expected.parquet")
+FIXTURES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 
 
 def main(max_doc_id: int = 5000) -> None:
     from bella_domify_spark.parsers.pdflike.gate import (
         expected_frame,
-        expected_frame_ocr,
-        expected_frame_standard,
-        expected_frame_stream,
+        gate_record,
+        gate_record_ocr,
+        gate_record_standard,
+        gate_record_stream,
     )
 
-    for frame_fn, out in ((expected_frame, OUT),
-                          (expected_frame_stream,
-                           OUT.replace("pdflike_expected",
-                                       "pdflike_stream_expected")),
-                          (expected_frame_ocr,
-                           OUT.replace("pdflike_expected",
-                                       "pdflike_ocr_expected")),
-                          (expected_frame_standard,
-                           OUT.replace("pdflike_expected",
-                                       "pdflike_standard_expected"))):
-        df = frame_fn(max_doc_id)
+    for record_fn, name in ((gate_record, "pdflike_expected"),
+                            (gate_record_stream, "pdflike_stream_expected"),
+                            (gate_record_ocr, "pdflike_ocr_expected"),
+                            (gate_record_standard,
+                             "pdflike_standard_expected")):
+        out = os.path.join(FIXTURES, f"{name}.parquet")
+        df = expected_frame(record_fn, max_doc_id)
         bad = df[df["status"] != "ok"]
         if len(bad):
             raise SystemExit(f"{len(bad)} gate payloads failed to parse: "
