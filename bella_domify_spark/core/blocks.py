@@ -13,6 +13,7 @@ from dataclasses import dataclass, field
 from typing import List, Optional, Union
 
 from bella_domify_spark.functions.listmark import recognize_list
+from bella_domify_spark.parsers.pdflike.cluster import group_physical_rows
 
 IMAGE_PLACEHOLDER = "<image>"
 
@@ -60,29 +61,33 @@ class Line:
     is_catalog: bool = False
     is_in_catalog: bool = False
     page: int = 0
+    # derived from ``spans``: set here and by ``spans_changed``
+    has_image: bool = field(default=False, init=False, repr=False,
+                            compare=False)
+    _text: Optional[str] = field(default=None, init=False, repr=False,
+                                 compare=False)  # ``text`` memo
 
     def __post_init__(self):
+        self.has_image = any(s.is_image for s in self.spans)
         if self.list_type is None:
             self.list_type, self.list_tag = recognize_list(self.text)
 
     @property
     def text(self) -> str:
-        spans = self.spans
-        if len(spans) == 1 and not spans[0].is_image:  # hot path
-            return spans[0].text
-        return "".join(s.display_text for s in spans)
+        text = self._text
+        if text is None:
+            text = self._text = "".join(s.display_text for s in self.spans)
+        return text
+
+    def spans_changed(self) -> None:
+        """Re-derive ``has_image`` and drop the memoized ``text``: call after
+        replacing ``spans`` or editing a span's text in place."""
+        self.has_image = any(s.is_image for s in self.spans)
+        self._text = None
 
     @property
     def raw_text(self) -> str:
         return "".join(s.text for s in self.spans if not s.is_image)
-
-    @property
-    def white_space_only(self) -> bool:
-        return all((not s.is_image) and not s.text.strip() for s in self.spans)
-
-    @property
-    def image_spans(self) -> List[Span]:
-        return [s for s in self.spans if s.is_image]
 
     @property
     def is_list(self) -> bool:
@@ -97,8 +102,10 @@ class Line:
 
 
 def most_common_insertion_ordered(values):
-    """``Counter(values).most_common(1)`` with Python's insertion-ordered
-    tie-breaking — the reference relies on it (Lines.py:115-136)."""
+    """``(value, count)`` of ``Counter(values).most_common(1)`` with
+    Python's insertion-ordered tie-breaking (the first value to reach the
+    top count wins) — the reference relies on it (Lines.py:115-136,
+    Pages.py:425-443); ``(None, -1)`` when ``values`` is empty."""
     counts = {}
     for v in values:
         counts[v] = counts.get(v, 0) + 1
@@ -106,22 +113,27 @@ def most_common_insertion_ordered(values):
     for v, n in counts.items():
         if n > best_n:
             best_v, best_n = v, n
-    return best_v
+    return best_v, best_n
 
 
 def lines_font_size_bold(lines: List[Line]):
     """Most-common font & size across spans; bold only when *all* spans are
     bold (Lines.py:115-136)."""
-    fonts = [s.font for ln in lines for s in ln.spans if not s.is_image]
-    sizes = [s.size for ln in lines for s in ln.spans if not s.is_image]
-    font = most_common_insertion_ordered(fonts) if fonts else None
-    size = most_common_insertion_ordered(sizes) if sizes else None
-    text_spans = [s for ln in lines for s in ln.spans if not s.is_image]
-    bold = bool(text_spans) and (
-        all(bool(s.flags & BOLD_FLAG) for s in text_spans)
-        or all(s.pseudo_bold for s in text_spans)
-    )
-    return font, size, bold
+    fonts, sizes = [], []
+    all_bold = all_pseudo = True
+    for ln in lines:
+        for s in ln.spans:
+            if s.is_image:
+                continue
+            fonts.append(s.font)
+            sizes.append(s.size)
+            if not s.flags & BOLD_FLAG:
+                all_bold = False
+            if not s.pseudo_bold:
+                all_pseudo = False
+    font = most_common_insertion_ordered(fonts)[0]
+    size = most_common_insertion_ordered(sizes)[0]
+    return font, size, bool(fonts) and (all_bold or all_pseudo)
 
 
 @dataclass
@@ -154,9 +166,26 @@ class TextBlock:
     before_space: Optional[float] = None
     line_space: Optional[float] = None
     # memoization (invalidated by merge)
+    _rows_cache: Optional[list] = field(default=None, repr=False, compare=False)
     _fsb_cache: Optional[tuple] = field(default=None, repr=False, compare=False)
     _bbox_cache: Optional[tuple] = field(default=None, repr=False, compare=False)
     _img_cache: Optional[bool] = field(default=None, repr=False, compare=False)
+
+    @classmethod
+    def from_rows(cls, rows: List[List[Line]], **kwargs) -> "TextBlock":
+        """A block of whole physical rows, given in first-occurrence order:
+        its ``rows`` are known without grouping its lines again."""
+        block = cls(lines=[l for row in rows for l in row], **kwargs)
+        block._rows_cache = rows
+        return block
+
+    @property
+    def rows(self) -> List[List[Line]]:
+        """Physical rows of ``lines`` in first-occurrence order (memoized)."""
+        cached = self._rows_cache
+        if cached is None:
+            cached = self._rows_cache = group_physical_rows(self.lines)
+        return cached
 
     @property
     def bbox(self) -> tuple:
@@ -187,7 +216,7 @@ class TextBlock:
     def is_image_block(self) -> bool:
         cached = self._img_cache
         if cached is None:
-            cached = any(l.image_spans for l in self.lines)
+            cached = any(l.has_image for l in self.lines)
             self._img_cache = cached
         return cached
 
@@ -220,6 +249,7 @@ class TextBlock:
 
     def merge(self, other: "TextBlock") -> None:
         self.lines.extend(other.lines)
+        self._rows_cache = None
         self._fsb_cache = None
         self._bbox_cache = None
         self._img_cache = None

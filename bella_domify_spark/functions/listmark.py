@@ -72,6 +72,45 @@ _TOC_IDX = len(ORDERED_LIST_PATTERN) - 1  # ".*(.)\\1{9,}\\d+$" — any first ch
 # regex \d (Nd category), NOT str.isdigit() — circled digits like ① are
 # isdigit()-True but \d-False
 _DIGIT = re.compile(r"\d")
+# maximal runs of >= 10 equal chars other than "\n" (the rule's
+# "(.)\1{9,}"): the greedy repeat consumes each whole run
+_RUN10 = re.compile(r"(.)\1{9,}")
+_FIRST_NON_SPACE = re.compile(r"\S")
+# the lookbehind keeps the search linear: only a run's first digit starts
+# a \d+ attempt
+_TRAILING_DIGITS = re.compile(r"(?<!\d)\d+$")
+
+
+def _toc_leader(text: str, end: int) -> bool:
+    """Whether rule 41, ``.*\\s*(.)\\1{9,}\\s*\\d+\\s*$``, matches ``text``,
+    in linear time; ``end`` is ``len(text.rstrip())`` and ``text[end - 1]``
+    is a ``\\d``. A match always spans the whole text (the last ``\\s*``
+    takes the trailing whitespace, a final newline included), so this is
+    all the caller needs.
+
+    The rule decomposes ``text`` as P + S1 + c*k + S2 + D + S3: P holds no
+    newline (``.*``), S1-S3 are whitespace, c is not a newline, k >= 10 and D
+    is digits. So the c-run may start at any index up to the first non-space
+    char after the first newline, and the remainder after its k-th char must
+    be S2 + D + S3: that remainder starts at or after the whitespace run
+    before the trailing digits and before ``end``. Each maximal run of a
+    char therefore qualifies iff it starts early enough, leaves room for
+    ten chars and a digit before ``end``, and reaches that whitespace run.
+    """
+    newline = text.find("\n")
+    if newline < 0:
+        start_limit = len(text)
+    else:
+        m = _FIRST_NON_SPACE.search(text, newline)
+        start_limit = m.start() if m else len(text)
+    digits = _TRAILING_DIGITS.search(text, 0, end).start()
+    gap = len(text[:digits].rstrip())
+    for run in _RUN10.finditer(text):
+        if run.start() > start_limit or run.start() + 11 > end:
+            break
+        if run.end() >= gap:
+            return True
+    return False
 
 
 def _candidate_indices(first: str):
@@ -114,12 +153,11 @@ def recognize_list(text: str) -> Tuple[Optional[Union[int, str]], Optional[str]]
                 return index + 1, m.group(0)
         # the TOC-leader rule ends in "\d+\s*$", so it can only match when
         # the last non-space char is a \d (str.rstrip and the regex \s
-        # agree on what is space); skipping it otherwise also skips its
-        # quadratic backtracking on long lines
-        if _DIGIT.match(text.rstrip()[-1:]):
-            m = _COMPILED[_TOC_IDX].match(text)
-            if m:
-                return _TOC_IDX + 1, m.group(0)
+        # agree on what is space); _toc_leader decides the rest in linear
+        # time, where the regex backtracks quadratically on long lines
+        end = len(text.rstrip())
+        if _DIGIT.match(text, end - 1, end) and _toc_leader(text, end):
+            return _TOC_IDX + 1, text
         m = _SPECIAL_START.match(text)
         if m:
             ch = m.group(0)

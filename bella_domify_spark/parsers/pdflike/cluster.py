@@ -1,23 +1,21 @@
-"""Row/column clustering and reading-order sort (NumPy-assisted).
+"""Row/column clustering and reading-order sort.
 
 Parity targets in /root/reference/doc_parser/dom_parser/parsers/pdf/common:
 - ``group_by_physical_rows`` — connected components under the centerline
   ``in_same_row`` predicate (Collection.py:198-208, Element.py:261-288).
 - ``sort_in_reading_order_plus`` — group rows top-to-bottom, sort each row
-  left-to-right (Collection.py:233-253).
+  left-to-right (Collection.py:233-253); ``reading_order_rows`` keeps the
+  rows, so the paragraph join does not group them again.
 
 The reference builds an O(n²) adjacency graph + BFS (Collection.py:90-128).
-Per-turn documents are small, but we still replace it with an O(n log n)
-sweep: sort by top edge, then union consecutive lines whose centerlines
-overlap — equivalent for interval graphs produced by the in_same_row
-predicate (intervals on the y-axis), and cheap inside an Arrow batch.
+``group_physical_rows`` finds the same components with one pure-Python
+sweep in center order, comparing each line only with the earlier lines
+whose bottom edge is still at or below its center.
 """
 
 from __future__ import annotations
 
 from typing import List, Sequence
-
-import numpy as np
 
 
 def group_physical_rows(lines: Sequence, sort_rows: bool = False) -> List[List]:
@@ -27,78 +25,46 @@ def group_physical_rows(lines: Sequence, sort_rows: bool = False) -> List[List]:
     closure over the sequence. Returned rows preserve original element order
     within a row (matching graph-BFS grouping on insertion order); rows are
     ordered by first occurrence, or by top edge when ``sort_rows``.
+
+    The sweep visits elements by ascending center. Once the current center
+    is below an earlier element's bottom edge, every later center is too,
+    so that element can match nothing further and leaves the active list;
+    each remaining one already meets the first half of the predicate. This
+    holds for any box, degenerate (y1 < y0) ones included.
     """
-    n = len(lines)
-    if n == 0:
-        return []
-    if n == 1:
-        return [list(lines)]
-    if n <= 8:
-        # small-n fast path: O(n²) closure without numpy array overhead
-        parent = list(range(n))
+    bottoms = [l.bbox[3] for l in lines]
+    centers = [(l.bbox[1] + b) / 2.0 for l, b in zip(lines, bottoms)]
+    parent = list(range(len(lines)))
 
-        def _find(i):
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        bb = [l.bbox for l in lines]
-        for i in range(n):
-            ci = (bb[i][1] + bb[i][3]) / 2.0
-            for j in range(i + 1, n):
-                cj = (bb[j][1] + bb[j][3]) / 2.0
-                if ci <= bb[j][3] and cj <= bb[i][3]:
-                    ri, rj = _find(i), _find(j)
-                    if ri != rj:
-                        parent[rj] = ri
-        groups: dict = {}
-        for i in range(n):
-            groups.setdefault(_find(i), []).append(i)
-        rows = [[lines[i] for i in idxs] for idxs in groups.values()]
-        if sort_rows:
-            rows.sort(key=lambda row: min(l.bbox[1] for l in row))
-        return rows
-    bboxes = np.array([l.bbox for l in lines], dtype=np.float64)
-    centers = (bboxes[:, 1] + bboxes[:, 3]) / 2.0
-
-    # union-find over pairs connected by in_same_row; sweep over y-sorted
-    # order and only compare neighbours whose y-ranges can still overlap.
-    parent = list(range(n))
-
-    def find(i):
+    def root(i):
         while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
+            parent[i] = i = parent[parent[i]]
         return i
 
-    def union(i, j):
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            parent[rj] = ri
-
-    order = np.argsort(bboxes[:, 1], kind="stable")
     active: List[int] = []
-    for idx in order:
-        i = int(idx)
-        still_active = []
+    for i in sorted(parent, key=centers.__getitem__):
+        c, y1 = centers[i], bottoms[i]
+        still = []
         for j in active:
-            # j can no longer match anything whose center is below j's bottom
-            if centers[i] > bboxes[j, 3] and bboxes[i, 1] > bboxes[j, 3]:
-                continue
-            still_active.append(j)
-            if centers[i] <= bboxes[j, 3] and centers[j] <= bboxes[i, 3]:
-                union(i, j)
-        active = still_active
-        active.append(i)
-
+            if bottoms[j] >= c:
+                still.append(j)
+                if centers[j] <= y1:
+                    # i is still a root: it only gains children here
+                    parent[root(j)] = i
+        still.append(i)
+        active = still
     groups: dict = {}
-    for i in range(n):
-        groups.setdefault(find(i), []).append(i)
-    rows = [[lines[i] for i in idxs] for idxs in groups.values()]
+    for i, line in enumerate(lines):
+        groups.setdefault(root(i), []).append(line)
+    rows = list(groups.values())
     if sort_rows:
-        rows.sort(key=lambda row: min(l.bbox[1] for l in row))
+        rows.sort(key=row_top)
     return rows
+
+
+def row_top(row: Sequence) -> float:
+    """Top edge of a row: the sort key of ``sort_rows``."""
+    return min(l.bbox[1] for l in row)
 
 
 def sort_in_line_order(row: List) -> List:
@@ -106,12 +72,11 @@ def sort_in_line_order(row: List) -> List:
     return sorted(row, key=lambda e: (e.bbox[0], e.bbox[1], e.bbox[2]))
 
 
-def sort_in_reading_order_plus(lines: Sequence) -> List:
-    """Rows top-to-bottom, elements left-to-right within each row."""
-    out: List = []
-    for row in group_physical_rows(lines, sort_rows=True):
-        out.extend(sort_in_line_order(row))
-    return out
+def reading_order_rows(lines: Sequence) -> List[List]:
+    """Physical rows top-to-bottom, elements left-to-right within each row.
+    They are also ``group_physical_rows`` of the flattened result."""
+    return [sort_in_line_order(row)
+            for row in group_physical_rows(lines, sort_rows=True)]
 
 
 # Full section/column detection (P12) lives in sections.py — the simplified

@@ -19,7 +19,11 @@ from __future__ import annotations
 import re
 from typing import List
 
-from bella_domify_spark.core.blocks import IMAGE_PLACEHOLDER, Line
+from bella_domify_spark.core.blocks import (
+    IMAGE_PLACEHOLDER,
+    Line,
+    most_common_insertion_ordered,
+)
 from bella_domify_spark.functions.textutils import (
     CATALOG_ITEM_PATTERN,
     is_position_matching,
@@ -31,17 +35,6 @@ from bella_domify_spark.parsers.pdflike.glyphdoc import RawPage, Stroke
 
 FREQUENCY_THRESHOLD_TIMES = 2
 FREQUENCY_THRESHOLD_RATE = 0.4
-
-
-def _most_common_insertion_ordered(values):
-    counts = {}
-    for v in values:
-        counts[v] = counts.get(v, 0) + 1
-    best_v, best_n = None, -1
-    for v, n in counts.items():
-        if n > best_n:
-            best_v, best_n = v, n
-    return best_v, best_n
 
 
 def _first_rule_height(page: RawPage):
@@ -58,7 +51,7 @@ def _possible_header_height(pages: List[RawPage]) -> float:
     for p in pages:
         h = _first_rule_height(p)
         heights.append(h + 5 if h else p.height / 10)
-    value, freq = _most_common_insertion_ordered(heights)
+    value, freq = most_common_insertion_ordered(heights)
     if value is None:
         return 0
     if freq / len(heights) >= FREQUENCY_THRESHOLD_RATE and freq >= FREQUENCY_THRESHOLD_TIMES:
@@ -68,21 +61,20 @@ def _possible_header_height(pages: List[RawPage]) -> float:
 
 def _vote(pages: List[RawPage], candidates_per_page: List[List[Line]], header: bool):
     """Frequency vote shared by header & footer identification."""
-    possible = [l for pl in candidates_per_page[:30] for l in pl]
+    # each candidate line's (image flag, de-numbered text, bbox), keyed once
+    keyed = [[(IMAGE_PLACEHOLDER in l.text, remove_number(l.text), l.bbox)
+              for l in pl] for pl in candidates_per_page]
+    possible = [(l, k) for pl, pk in zip(candidates_per_page[:30], keyed)
+                for l, k in zip(pl, pk)]
     n_pages = len(pages)
-    for cand in possible:
-        is_image = IMAGE_PLACEHOLDER in cand.text
+    for cand, (is_image, key, bbox) in possible:
+        if not (is_image or cand.text):
+            continue
         cnt = 0
-        for page_list in candidates_per_page:
-            for line in page_list:
-                if is_image:
-                    ok = IMAGE_PLACEHOLDER in line.text and \
-                        is_position_matching(line.bbox, cand.bbox)
-                else:
-                    ok = cand.text and \
-                        remove_number(cand.text) == remove_number(line.text) and \
-                        is_position_matching(line.bbox, cand.bbox)
-                if ok:
+        for page_keys in keyed:
+            for l_image, l_key, l_bbox in page_keys:
+                if (l_image if is_image else l_key == key) and \
+                        is_position_matching(l_bbox, bbox):
                     cnt += 1
                     break
         if cnt / n_pages >= FREQUENCY_THRESHOLD_RATE and cnt >= FREQUENCY_THRESHOLD_TIMES:
@@ -90,7 +82,7 @@ def _vote(pages: List[RawPage], candidates_per_page: List[List[Line]], header: b
                 cand.is_header = True
             else:
                 cand.is_footer = True
-    return [c for c in possible if (c.is_header if header else c.is_footer)]
+    return [c for c, _ in possible if (c.is_header if header else c.is_footer)]
 
 
 def identify_header_footer(pages: List[RawPage]) -> None:
@@ -153,13 +145,14 @@ def parse_catalog(pages: List[RawPage]) -> List[str]:
     previous_row = None
     for row in rows:
         text = "".join(squash_spaces(l.text.strip()) for l in row)
-        if len(CATALOG_ITEM_PATTERN.findall(text)) >= 3:
+        n_items = len(CATALOG_ITEM_PATTERN.findall(text))
+        if n_items >= 3:
             found_catalog = True
             catalog_rows.append(row)
             if _is_catalog_title(previous_row):
                 catalog_rows.insert(0, previous_row)
             continue
-        if CATALOG_ITEM_PATTERN.search(text):
+        if n_items:
             catalog_rows.append(row)
             if len(catalog_rows) == 3 and _is_catalog_title(previous_row):
                 catalog_rows.insert(0, previous_row)

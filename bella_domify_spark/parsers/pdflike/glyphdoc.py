@@ -92,20 +92,17 @@ def _span_from_raw(raw: dict) -> Span:
     )
 
 
-def _strip_line(line: Line) -> None:
-    """Strip leading/trailing whitespace of the outermost spans
-    (Line.strip → Spans.strip semantics, simplified to text-level strip)."""
-    spans = [s for s in line.spans if s.is_image or s.text]
-    if not spans:
-        line.spans = spans
-        return
-    first_ts = next((s for s in spans if not s.is_image), None)
-    last_ts = next((s for s in reversed(spans) if not s.is_image), None)
-    if first_ts is not None:
-        first_ts.text = first_ts.text.lstrip()
-    if last_ts is not None and last_ts.text:
-        last_ts.text = last_ts.text.rstrip()
-    line.spans = [s for s in spans if s.is_image or s.text]
+def _strip_spans(spans: List[Span]) -> List[Span]:
+    """Strip leading/trailing whitespace of the outermost text spans and
+    drop the spans left empty (Line.strip → Spans.strip semantics,
+    simplified to text-level strip)."""
+    spans = [s for s in spans if s.is_image or s.text]
+    texts = [s for s in spans if not s.is_image]
+    if not texts:
+        return spans
+    texts[0].text = texts[0].text.lstrip()
+    texts[-1].text = texts[-1].text.rstrip()
+    return [s for s in spans if s.is_image or s.text]
 
 
 def _area(b) -> float:
@@ -162,7 +159,7 @@ def _extract_floating_images(lines: List[Line],
     leave the flow layout. Returns (flow_lines, float_image_lines). Must run
     BEFORE overlapped-line dedup (Blocks.py:158-162 order)."""
     n = len(lines)
-    if n < 2 or not any(l.image_spans for l in lines):
+    if n < 2 or not any(l.has_image for l in lines):
         return lines, []
 
     def connected(a, b) -> bool:
@@ -189,7 +186,7 @@ def _extract_floating_images(lines: List[Line],
         sizes[find(i)] = sizes.get(find(i), 0) + 1
     flow, floats = [], []
     for i, line in enumerate(lines):
-        if sizes[find(i)] > 1 and line.image_spans:
+        if sizes[find(i)] > 1 and line.has_image:
             floats.append(line)
         else:
             flow.append(line)
@@ -210,10 +207,10 @@ def _dedupe_overlapped(lines: List[Line], threshold: float = 0.9) -> List[Line]:
     from bella_domify_spark.parsers.pdflike.sections import _group_by_interval
 
     drop = set()
-    areas = {id(l): _area(l.bbox) for l in lines}
     for comp in _group_by_interval(lines, 1, 3):
         if len(comp) < 2:
             continue
+        areas = [_area(l.bbox) for l in comp]
         for i in range(len(comp)):
             a = comp[i]
             if id(a) in drop:
@@ -223,9 +220,9 @@ def _dedupe_overlapped(lines: List[Line], threshold: float = 0.9) -> List[Line]:
                 if id(b) in drop:
                     continue
                 inter = _inter_area(a.bbox, b.bbox)
-                smaller = min(areas[id(a)], areas[id(b)]) or 1e-6
+                smaller = min(areas[i], areas[j]) or 1e-6
                 if inter / smaller >= threshold:
-                    drop.add(id(a) if areas[id(a)] < areas[id(b)] else id(b))
+                    drop.add(id(a) if areas[i] < areas[j] else id(b))
     return [l for l in lines if id(l) not in drop]
 
 
@@ -309,31 +306,28 @@ def _load_pages(doc: dict) -> List[RawPage]:
                 # (layout_parser/pdf_parser.py:21-27 / Blocks.py clean-up)
                 if direction not in ((1.0, 0.0), (0.0, -1.0)):
                     continue
-                spans = [_span_from_raw(s) for s in raw_line.get("spans", [])]
-                line = Line(
-                    spans=spans,
-                    bbox=tuple(raw_line.get("bbox", (0, 0, 0, 0))),
-                    dir=direction,
-                    page=pid,
-                )
+                bbox = tuple(raw_line.get("bbox", (0, 0, 0, 0)))
                 # drop out-of-page lines
-                if line.bbox[2] <= 0 or line.bbox[3] <= 0 or \
-                        line.bbox[0] >= width or line.bbox[1] >= height:
+                if bbox[2] <= 0 or bbox[3] <= 0 or \
+                        bbox[0] >= width or bbox[1] >= height:
                     continue
+                spans = [_span_from_raw(s) for s in raw_line.get("spans", [])]
                 # drop whitespace-only lines
-                if line.white_space_only:
+                if all(not s.is_image and not s.text.strip() for s in spans):
                     continue
-                _strip_line(line)
-                if not line.spans:
+                # strip before the Line exists, so its one list recognition
+                # (Line.__post_init__) sees the stripped text
+                spans = _strip_spans(spans)
+                if not spans:
                     continue
                 # pseudo-bold assignment (Layout.py:81-112 analogue)
                 if pseudo_bold:
-                    for s in line.spans:
+                    for s in spans:
                         if not s.is_image and s.text in pseudo_bold:
                             s.pseudo_bold = True
                 # font-metric enrichment (P6, RawPage.process_font :105-124)
                 if font_map:
-                    for s in line.spans:
+                    for s in spans:
                         if s.is_image:
                             continue
                         hit = font_map.get(_font_descriptor(s.font))
@@ -341,9 +335,7 @@ def _load_pages(doc: dict) -> List[RawPage]:
                             s.font = hit[0]
                             if hit[1]:
                                 s.line_height = hit[1] * s.size
-                # re-run list recognition after strip
-                from bella_domify_spark.functions.listmark import recognize_list
-                line.list_type, line.list_tag = recognize_list(line.text)
+                line = Line(spans=spans, bbox=bbox, dir=direction, page=pid)
                 page.lines.append(line)
         page.lines, page.float_image_lines = _extract_floating_images(page.lines)
         page.lines = _dedupe_overlapped(page.lines)

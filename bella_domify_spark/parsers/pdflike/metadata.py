@@ -26,7 +26,7 @@ from __future__ import annotations
 from typing import List, Optional, Tuple
 
 from bella_domify_spark.core.blocks import TextBlock
-from bella_domify_spark.parsers.pdflike.cluster import group_physical_rows
+from bella_domify_spark.parsers.pdflike.cluster import row_top
 from bella_domify_spark.parsers.pdflike.glyphdoc import RawPage
 
 LINE_SEPARATE_THRESHOLD = 5.0       # config.py:32
@@ -167,6 +167,7 @@ def parse_text_styles(page: RawPage) -> None:
                         _classify_style(part, shape.bbox, color)
                     new_spans.append(part)
             line.spans = new_spans
+            line.spans_changed()
 
 
 # ---------------------------------------------------------------------------
@@ -185,7 +186,7 @@ def _parse_alignment(block: TextBlock, x_range: Tuple[float, float],
     block.right_space = d_right
 
     if phys_rows is None:
-        phys_rows = group_physical_rows(block.lines, sort_rows=True)
+        phys_rows = sorted(block.rows, key=row_top)
     rows = [sorted(r, key=lambda l: l.bbox[0]) for r in phys_rows]
 
     def external_alignment() -> str:
@@ -251,7 +252,7 @@ def _parse_line_spacing(block: TextBlock,
     # TextBlock.parse_relative_line_spacing (:231-259): standard height =
     # sum of per-row max span line_height (P6 font metric when available,
     # else the line's own bbox height)
-    if any(l.image_spans for l in block.lines):
+    if any(l.has_image for l in block.lines):
         block.line_space = DEFAULT_LINE_SPACING
         return
 
@@ -260,7 +261,7 @@ def _parse_line_spacing(block: TextBlock,
         return max(heights) if heights else ln.bbox[3] - ln.bbox[1]
 
     rows = phys_rows if phys_rows is not None else \
-        group_physical_rows(block.lines, sort_rows=True)
+        sorted(block.rows, key=row_top)
     height = block.bbox[3] - block.bbox[1]
     std = sum(max(line_h(l) for l in row) for row in rows)
     spacing = height / std if std > 0 else DEFAULT_LINE_SPACING
@@ -275,8 +276,8 @@ def parse_alignment_spacing(blocks: List, x_range: Tuple[float, float],
     ref = y_ref if y_ref is not None else 0.0
     for block in blocks:
         if isinstance(block, TextBlock) and block.is_text_block and block.lines:
-            # both consumers group the same lines — do it once
-            phys_rows = group_physical_rows(block.lines, sort_rows=True)
+            # both consumers read the same rows, top to bottom
+            phys_rows = sorted(block.rows, key=row_top)
             _parse_alignment(block, x_range, phys_rows)
             _parse_line_spacing(block, phys_rows)
         before = round(max(block.bbox[1] - ref, 0.0), 1)

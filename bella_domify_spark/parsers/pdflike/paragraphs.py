@@ -16,9 +16,15 @@ from __future__ import annotations
 import math
 import re
 import string
+from itertools import accumulate, count
 from typing import List, Optional
 
-from bella_domify_spark.core.blocks import Line, TextBlock, lines_font_size_bold
+from bella_domify_spark.core.blocks import (
+    Line,
+    TextBlock,
+    lines_font_size_bold,
+    most_common_insertion_ordered,
+)
 from bella_domify_spark.parsers.pdflike.cluster import (
     group_physical_rows,
     sort_in_line_order,
@@ -42,18 +48,13 @@ def _vertical_distance(b1, b2) -> float:
     return math.ceil(max(b2.bbox[1] - b1.bbox[3], 0))
 
 
-def _common_vertical_spacing(lines: List[Line]) -> float:
-    """Most frequent inter-row gap (Blocks.py:387-396); list.count tie-break
-    keeps the reference's max(key=count) first-max semantics."""
-    if not lines:
-        return 0.0
-    prev = lines[0]
-    distances = []
-    for line in lines[1:]:
-        if not prev.in_same_row(line):
-            distances.append(_vertical_distance(prev, line))
-        prev = line
-    return max(distances, key=distances.count) if distances else 0.0
+def _common_vertical_spacing(same: List[bool], dist: List[int]) -> float:
+    """Most frequent inter-row gap (Blocks.py:387-396) over consecutive line
+    pairs (``same``: in the same row, ``dist``: vertical distance); the
+    first gap to reach the top count wins, like the reference's
+    max(key=list.count)."""
+    distances = [d for s, d in zip(same, dist) if not s]
+    return most_common_insertion_ordered(distances)[0] if distances else 0.0
 
 
 def _word_width(line: Line) -> float:
@@ -66,9 +67,28 @@ def _is_retraction(bbox, text_len: int, left_x: float) -> bool:
     return (bbox[0] - left_x) > 1.5 * word_w
 
 
-def _border_groups(lines: List[Line], ref_dis: float):
+def _whole_rows(rows: List[List[Line]]):
+    """``rows`` (physical rows in reading order) flattened to lines, and a
+    function giving the rows of the run ``lines[a:b]`` when the run is
+    whole rows, None when it cuts a row. No pair of lines across two rows
+    is in the same row, so those rows are ``group_physical_rows`` of the
+    run."""
+    lines = [l for row in rows for l in row]
+    starts = dict(zip(accumulate(map(len, rows), initial=0), count()))
+
+    def rows_of(a: int, b: int) -> Optional[List[List[Line]]]:
+        first, stop = starts.get(a), starts.get(b)
+        if first is None or stop is None:
+            return None
+        return rows[first:stop]
+    return lines, rows_of
+
+
+def _border_groups(rows: List[List[Line]], ref_dis: float):
     """cal_text_border_group (Blocks.py:410-453): group consecutive lines by
-    similar spacing; per line → ((left_x, right_x), has_retraction)."""
+    similar spacing; per line → ((left_x, right_x), has_retraction).
+    ``rows`` are the physical rows in reading order."""
+    lines, rows_of = _whole_rows(rows)
     group_info = {}
     tmp: List[tuple] = []
 
@@ -76,14 +96,15 @@ def _border_groups(lines: List[Line], ref_dis: float):
         if not tmp:
             return
         x_p = (min(int(l.bbox[0]) for _, l in tmp), max(int(l.bbox[2]) for _, l in tmp))
-        rows = group_physical_rows([l for _, l in tmp])
+        run_rows = rows_of(tmp[0][0], tmp[-1][0] + 1) or \
+            group_physical_rows([l for _, l in tmp])
         # Reference is_retraction on a Lines row (Blocks.py:399-407) measures
         # word width from the row's FIRST line only, against the row-union
         # left edge.
         retraction = any(
             (min(l.bbox[0] for l in row) - x_p[0]) >
             1.5 * ((row[0].bbox[2] - row[0].bbox[0]) / max(len(row[0].text), 1))
-            for row in rows
+            for row in run_rows
         )
         for i, _ in tmp:
             group_info[i] = (x_p, retraction)
@@ -110,34 +131,42 @@ def _border_groups(lines: List[Line], ref_dis: float):
     return group_info
 
 
-def join_lines_vertically(lines: List[Line]) -> List[TextBlock]:
+def join_lines_vertically(rows: List[List[Line]]) -> List[TextBlock]:
     """Port of the `_join_lines_vertically` precedence chain
-    (Blocks.py:472-534). Input lines must already be in reading order."""
-    if not lines:
+    (Blocks.py:472-534) over a column's physical rows in reading order
+    (cluster.reading_order_rows). A block of whole rows is handed them."""
+    if not rows:
         return []
+    lines, rows_of = _whole_rows(rows)
     blocks: List[TextBlock] = []
     cur: List[Line] = []
 
-    def close():
+    def close(end: int) -> None:
         if cur:
-            blocks.append(TextBlock(lines=list(cur)))
+            whole = rows_of(end - len(cur), end)
+            blocks.append(TextBlock.from_rows(whole) if whole
+                          else TextBlock(lines=list(cur)))
             cur.clear()
 
     g_left = min(int(l.bbox[0]) for l in lines)
     g_right = max(int(l.bbox[2]) for l in lines)
-    ref_dis = _common_vertical_spacing(lines)
-    groups = _border_groups(lines, ref_dis)
+    # per consecutive pair (lines[k], lines[k + 1]), computed once
+    same = [a.in_same_row(b) for a, b in zip(lines, lines[1:])]
+    dist = [_vertical_distance(a, b) for a, b in zip(lines, lines[1:])]
+    ref_dis = _common_vertical_spacing(same, dist)
+    groups = _border_groups(rows, ref_dis)
 
     for idx, line in enumerate(lines):
+        # cur is the run lines[idx - len(cur):idx]
         ref_line = cur[-1] if cur else None
-        vec_dis = _vertical_distance(ref_line, line) if ref_line else None
-        pre_vec_dis = _vertical_distance(cur[-2], ref_line) if len(cur) > 1 else None
-        next_vec_dis = _vertical_distance(line, lines[idx + 1]) if idx < len(cur) - 1 else None
+        vec_dis = dist[idx - 1] if ref_line else None
+        pre_vec_dis = dist[idx - 2] if len(cur) > 1 else None
+        next_vec_dis = dist[idx] if idx < len(cur) - 1 else None
         word_w = _word_width(line)
 
-        if not ref_line or ref_line.in_same_row(line):
+        if not ref_line or same[idx - 1]:
             start_new = False
-        elif line.image_spans or ref_line.image_spans:
+        elif line.has_image or ref_line.has_image:
             start_new = True
         elif line.is_list:
             start_new = True
@@ -159,15 +188,15 @@ def join_lines_vertically(lines: List[Line]) -> List[TextBlock]:
         elif is_center_aligned(line.bbox, g_left, g_right) != \
                 is_center_aligned(ref_line.bbox, g_left, g_right):
             start_new = True
-        elif _vertical_distance(ref_line, line) <= ref_dis + 1.0:
+        elif vec_dis <= ref_dis + 1.0:
             start_new = False
         else:
             start_new = True
 
         if start_new:
-            close()
+            close(idx)
         cur.append(line)
-    close()
+    close(len(lines))
     return blocks
 
 
@@ -175,33 +204,47 @@ def split_block_by_text(block: TextBlock, text_left_x: float, text_right_x: floa
     """Port of Lines.split_vertically_by_text (Lines.py:158-236): split a
     merged block into paragraphs at indents / font changes / short last
     lines; returns blocks carrying start/end-of-paragraph flags."""
-    rows = group_physical_rows(block.lines)
+    rows = block.rows
     if len(rows) == 1:
         is_list = rows[0][0].is_list
-        return [TextBlock(lines=list(rows[0]),
-                          first_line_start_of_paragraph=True,
-                          last_line_end_of_paragraph=bool(is_list))]
+        return [TextBlock.from_rows([rows[0]],
+                                    first_line_start_of_paragraph=True,
+                                    last_line_end_of_paragraph=bool(is_list))]
 
     res: List[TextBlock] = []
-    cur: List[Line] = []
+    cur: List[List[Line]] = []  # rows of the open paragraph
     start_of_para = end_of_para = False
     prev_row: Optional[List[Line]] = None
+    prev_fsb = None  # lines_font_size_bold(prev_row), once computed
+
+    def flush(start: bool, end: bool) -> None:
+        res.append(TextBlock.from_rows(list(cur),
+                                       first_line_start_of_paragraph=start,
+                                       last_line_end_of_paragraph=end))
+        cur.clear()
 
     for row in rows:
         row = sort_in_line_order(row)
         word_w = _word_width(row[0])
+        fsb = None
+        head = cur[0][0] if cur else None  # the open paragraph's first line
 
-        if row and not row[0].is_list and cur and cur[0].is_list and \
-                text_right_x - cur[0].bbox[2] < 1.5 * word_w and \
-                row[0].bbox[0] - cur[0].bbox[0] < (word_w * (len(cur[0].list_tag or "") + 1.5)):
+        if row and not row[0].is_list and head is not None and head.is_list and \
+                text_right_x - head.bbox[2] < 1.5 * word_w and \
+                row[0].bbox[0] - head.bbox[0] < (word_w * (len(head.list_tag or "") + 1.5)):
             start_of_para = False
         elif row and row[0].bbox[0] - text_left_x > (word_w * 1.5):
             start_of_para = True
         elif prev_row:
-            prev_font, prev_size, prev_bold = lines_font_size_bold(prev_row) \
-                if prev_row[-1].spans and not prev_row[-1].spans[-1].is_image else (None, None, False)
-            cur_font, cur_size, cur_bold = lines_font_size_bold(row) \
-                if row and row[-1].spans and not row[-1].spans[0].is_image else (None, None, False)
+            prev_size = prev_bold = None
+            if prev_row[-1].spans and not prev_row[-1].spans[-1].is_image:
+                if prev_fsb is None:
+                    prev_fsb = lines_font_size_bold(prev_row)
+                _, prev_size, prev_bold = prev_fsb
+            cur_size = cur_bold = None
+            if row and row[-1].spans and not row[-1].spans[0].is_image:
+                fsb = lines_font_size_bold(row)
+                _, cur_size, cur_bold = fsb
             if prev_size and cur_size:
                 if abs(prev_size - cur_size) > 0.5 or prev_bold != cur_bold:
                     start_of_para = True
@@ -211,25 +254,16 @@ def split_block_by_text(block: TextBlock, text_left_x: float, text_right_x: floa
 
         # NOTE: the reference stamps the flushed block with the *current*
         # row's start_of_para value (Lines.py:219-235) — replicated exactly.
-        if start_of_para:
-            if cur:
-                res.append(TextBlock(lines=list(cur),
-                                     first_line_start_of_paragraph=start_of_para,
-                                     last_line_end_of_paragraph=True))
-            cur = []
-        cur.extend(row)
+        if start_of_para and cur:
+            flush(start_of_para, True)
+        cur.append(row)
         if end_of_para:
-            res.append(TextBlock(lines=list(cur),
-                                 first_line_start_of_paragraph=start_of_para,
-                                 last_line_end_of_paragraph=end_of_para))
-            cur = []
+            flush(start_of_para, end_of_para)
         start_of_para = end_of_para = False
-        prev_row = row
+        prev_row, prev_fsb = row, fsb
 
     if cur:
-        res.append(TextBlock(lines=list(cur),
-                             first_line_start_of_paragraph=start_of_para,
-                             last_line_end_of_paragraph=end_of_para))
+        flush(start_of_para, end_of_para)
     return res
 
 
@@ -258,9 +292,11 @@ def adjust_last_word(lines: List[Line], delete_end_line_hyphen: bool = True) -> 
         if delete_end_line_hyphen and end_char == '-' and next_start_char.islower():
             end_span.text = end_span.text[:-1]
             end_char = ''
+            line.spans_changed()
 
         if is_end_of_english_word(end_char) and is_end_of_english_word(next_start_char):
             end_span.text += ' '
+            line.spans_changed()
 
 
 def identify_titles(blocks: List) -> None:
@@ -275,13 +311,13 @@ def identify_titles(blocks: List) -> None:
     text_right_x = max(b.bbox[2] for b in text_blocks)
 
     for block, next_block in zip(blocks, blocks[1:]):
-        if not getattr(block, "is_text_block", False) or block.lines[0].image_spans:
+        if not getattr(block, "is_text_block", False) or block.lines[0].has_image:
             continue
         if any(l.is_in_catalog for l in block.lines):
             block.is_title = True
             continue
         cur_is_center = is_center_aligned(block.bbox, text_left_x, text_right_x)
-        if not getattr(next_block, "is_text_block", False) or next_block.lines[0].image_spans:
+        if not getattr(next_block, "is_text_block", False) or next_block.lines[0].has_image:
             if cur_is_center:
                 block.is_title = True
             continue

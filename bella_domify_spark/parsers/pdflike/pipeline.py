@@ -22,7 +22,7 @@ from typing import List
 from bella_domify_spark.core.blocks import TableBlock, TextBlock
 from bella_domify_spark.core.tree import DomTree
 from bella_domify_spark.parsers.pdflike import docscan, glyphdoc, metadata, tables
-from bella_domify_spark.parsers.pdflike.cluster import sort_in_reading_order_plus
+from bella_domify_spark.parsers.pdflike.cluster import reading_order_rows
 from bella_domify_spark.parsers.pdflike.sections import (
     calculate_margin,
     parse_sections,
@@ -73,8 +73,7 @@ def parse(payload: str, parse_stream_table: bool = False,
         shapes = list(page.strokes) + list(page.fills)
         for section in parse_sections(page.lines, x_range, shapes=shapes):
             for column in section:
-                ordered = sort_in_reading_order_plus(column)
-                joined = join_lines_vertically(ordered)
+                joined = join_lines_vertically(reading_order_rows(column))
                 blocks.extend(_split_blocks(joined))
         # place tables into the flow by vertical position
         for t in page_tables:

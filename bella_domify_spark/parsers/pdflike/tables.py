@@ -33,7 +33,7 @@ import numpy as np
 from bella_domify_spark.core.blocks import Cell, Line, TableBlock
 from bella_domify_spark.parsers.pdflike.cluster import (
     group_physical_rows,
-    sort_in_reading_order_plus,
+    reading_order_rows,
 )
 from bella_domify_spark.parsers.pdflike.glyphdoc import RawPage, Stroke
 from bella_domify_spark.parsers.pdflike.sections import (
@@ -135,8 +135,8 @@ def _cell_text(lines: List[Line]) -> str:
         join_lines_vertically,
     )
 
-    ordered = sort_in_reading_order_plus(lines)
-    blocks = pipeline._split_blocks(join_lines_vertically(ordered))
+    blocks = pipeline._split_blocks(
+        join_lines_vertically(reading_order_rows(lines)))
     for b in blocks:
         adjust_last_word(b.lines, delete_end_line_hyphen=True)
     return "\n".join(b.text for b in blocks)

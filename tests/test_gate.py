@@ -1,7 +1,11 @@
 """pdflike correctness-gate plumbing: Spark mapInPandas output must equal
-the pure-Python expected frame, and payloads must be deterministic."""
+the pure-Python expected frame, payloads must be deterministic, and the
+pure parse must reproduce the pinned oracle fixtures."""
+
+import os
 
 import pandas as pd
+import pytest
 
 from bella_domify_spark.parsers.pdflike.gate import (
     expected_frame,
@@ -12,6 +16,9 @@ from bella_domify_spark.parsers.pdflike.gate import (
     gate_record,
     gate_record_stream,
 )
+
+FIXTURES = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "fixtures")
 
 
 def test_gate_payload_deterministic():
@@ -95,3 +102,20 @@ def test_stream_gate_extract_matches_expected(spark):
     exp = expected_frame(gate_record_stream, 40)
     assert (got["status"] == "ok").all()
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
+@pytest.mark.parametrize("record_fn, fixture", [
+    (gate_record, "pdflike_expected.parquet"),
+    (gate_record_stream, "pdflike_stream_expected.parquet"),
+])
+def test_records_equal_pinned_fixture(record_fn, fixture):
+    # Spark-free: the pure parse of the first ids must reproduce the pinned
+    # oracle rows byte for byte, so a pdflike change that alters any output
+    # fails here and not only in tools/check_oracle.py
+    n = 300
+    path = os.path.join(FIXTURES, fixture)
+    pinned = pd.read_parquet(path, filters=[("doc_id", "<", n)])
+    pinned = pinned.sort_values("doc_id").reset_index(drop=True)
+    assert list(pinned["doc_id"]) == list(range(n))
+    got = expected_frame(record_fn, n)
+    pd.testing.assert_frame_equal(got, pinned, check_dtype=False)

@@ -105,7 +105,7 @@ class TestFloatingImages:  # P5, Blocks.py:321-336, gap config.py:22
         page = pages[0]
         assert [l.text for l in page.lines] == ["body text line with words"]
         assert len(page.float_image_lines) == 1
-        assert page.float_image_lines[0].image_spans
+        assert page.float_image_lines[0].has_image
 
     def test_isolated_image_stays_in_flow(self):
         text = _line("body text line with words", [72, 100, 300, 111])

@@ -1,7 +1,13 @@
 """Property test: the first-char-gated list recognizer is exactly equivalent
-to the reference's test-all-41-rules-in-order implementation, and it never
-tries the TOC-leader rule on text that cannot end in its page number."""
+to the reference's test-all-41-rules-in-order implementation, it never
+tries the TOC-leader rule on text that cannot end in its page number, and
+it decides that rule in linear time."""
 
+import os
+import subprocess
+import sys
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -41,24 +47,66 @@ _multiline = st.builds(lambda lines, tail: "\n".join(lines) + tail,
                                 max_size=4), _tail)
 
 
+# lines built from runs of one char (5-24 long, around the rule's
+# 10-char minimum), so the TOC-leader rule's runs, whitespace, newlines and
+# trailing digits meet in every order. Kept under ~200 chars: on runs of
+# spaces or digits the reference regex backtracks cubically.
+_run_char = st.sampled_from([".", "·", " ", "\t", "\n", "\u3000", "a", "1",
+                             "٣", "-"])
+_runs = st.lists(st.tuples(_run_char, st.integers(1, 24)), min_size=1,
+                 max_size=8).map(lambda rs: "".join(c * n for c, n in rs))
+_long = st.builds(lambda head, body, tail: head + body + tail,
+                  st.sampled_from(["", "Intro", "第三章 x", "1. ", "  ", "\n"]),
+                  _runs, _tail)
+
+
 @settings(max_examples=600, deadline=None)
-@given(st.one_of(_interesting, _random, _multiline))
+@given(st.one_of(_interesting, _random, _multiline, _long))
 def test_gated_equals_reference(text):
     assert recognize_list(text) == recognize_list_reference(text)
 
 
+def test_long_digit_terminated_lines_equal_reference():
+    # 2000 chars where the reference is quadratic, 150 where it is cubic
+    for text in ["a" * 2000 + "b1", "." * 2000 + "1", "ab" * 1000 + "3\n",
+                 "Intro" + "." * 2000 + " 12 \n", "x\ny" + "." * 1500 + "7",
+                 ("." * 9 + "x") * 200 + "1", "x\n" + " " * 150 + "." * 10 + "7",
+                 "1" * 150 + "a1", " " * 150 + "x1", "\n" * 150 + "." * 10 + "1",
+                 "." * 10 + "\n" * 150 + "1\n",
+                 # a run of digits is its own page number only past 10
+                 "1" * 10, "1" * 11, "x" + "1" * 10, "٣" * 10 + " \n"]:
+        assert recognize_list(text) == recognize_list_reference(text), text[:20]
+
+
+def test_long_digit_terminated_line_is_fast():
+    # the TOC-leader regex backtracks quadratically on this line (minutes);
+    # the linear matcher answers in milliseconds. A child process keeps a
+    # slow implementation from hanging the suite.
+    code = ("import time\n"
+            "from bella_domify_spark.functions.listmark import recognize_list\n"
+            "text = 'a' * 200000 + 'b1'\n"
+            "t0 = time.perf_counter()\n"
+            "assert recognize_list(text) == (None, None)\n"
+            "print(time.perf_counter() - t0)\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    try:
+        out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                             capture_output=True, text=True, check=True,
+                             timeout=30).stdout
+    except subprocess.TimeoutExpired:
+        pytest.fail("recognize_list took over 30 s on a 200k-char line")
+    assert float(out) < 1.0
+
+
 def test_toc_rule_tried_only_on_digit_tails(monkeypatch):
     calls = []
-    rule = listmark._COMPILED[listmark._TOC_IDX]
+    rule = listmark._toc_leader
 
-    class Spy:
-        def match(self, text):
-            calls.append(text)
-            return rule.match(text)
+    def spy(text, end):
+        calls.append(text)
+        return rule(text, end)
 
-    spied = list(listmark._COMPILED)
-    spied[listmark._TOC_IDX] = Spy()
-    monkeypatch.setattr(listmark, "_COMPILED", spied)
+    monkeypatch.setattr(listmark, "_toc_leader", spy)
     for text in ["Intro..........x", "Intro..........12a", "a" * 8000,
                  "plain words", "٣ ends in a letter", "12 \n\n x",
                  "• bullet", "第三章 chapter x"]:

@@ -12,7 +12,7 @@ from bella_domify_spark.functions.textutils import remove_number
 from bella_domify_spark.parsers.pdflike import docscan, glyphdoc, pipeline, tables
 from bella_domify_spark.parsers.pdflike.cluster import (
     group_physical_rows,
-    sort_in_reading_order_plus,
+    reading_order_rows,
 )
 from bella_domify_spark.parsers.pdflike.sections import parse_sections
 from bella_domify_spark.parsers.pdflike.paragraphs import adjust_last_word
@@ -82,8 +82,8 @@ class TestClustering:  # P13/P14, common/Collection.py
         a = mk_line("B", 300, 100)
         b = mk_line("A", 72, 101)
         c = mk_line("C", 72, 130)
-        ordered = sort_in_reading_order_plus([a, b, c])
-        assert [l.text for l in ordered] == ["A", "B", "C"]
+        rows = reading_order_rows([a, b, c])
+        assert [[l.text for l in row] for row in rows] == [["A", "B"], ["C"]]
 
     def test_two_columns(self):
         left = [mk_line("l1", 72, 100, w=180), mk_line("l2", 72, 120, w=180)]
@@ -294,7 +294,7 @@ class TestBorderGroups:  # P18 helper, layout/Blocks.py:410-453
         l1 = mk_line("first line text here", 72, 0)
         l2 = mk_line("second line text here", 72, 20)   # gap 20-11 = 9
         l3 = mk_line("third shorter", 72, 42)           # gap 42-31 = 11
-        g = _border_groups([l1, l2, l3], ref_dis=9.0)
+        g = _border_groups(reading_order_rows([l1, l2, l3]), ref_dis=9.0)
         assert g[0] == g[1]
         assert g[2][0] != g[0][0]
 
@@ -308,7 +308,7 @@ class TestBorderGroups:  # P18 helper, layout/Blocks.py:410-453
         base = mk_line("left-edge reference line sits here", 72, 0)
         a1 = mk_line("ab", 90, 13)                      # word_w = 10.5*0.5
         a2 = mk_line("continuation of the same physical row", 300, 13)
-        g = _border_groups([base, a1, a2], ref_dis=5.0)
+        g = _border_groups(reading_order_rows([base, a1, a2]), ref_dis=5.0)
         assert g[0][1] is True                          # retraction detected
 
 

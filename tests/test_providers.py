@@ -88,8 +88,9 @@ def _payload_with_images() -> str:
 class TestPipelineThreading:
     def test_type1_block_becomes_image_line(self):
         pages = glyphdoc.load(_payload_with_images())
-        image_lines = [l for p in pages for l in p.lines if l.image_spans]
-        metas = [l.image_spans[0].image_meta for l in image_lines]
+        image_lines = [l for p in pages for l in p.lines if l.has_image]
+        metas = [next(s for s in l.spans if s.is_image).image_meta
+                 for l in image_lines]
         assert len(image_lines) == 3
         assert all(m and "n_bytes" in m and "sha" in m for m in metas)
         # deterministic content-address: 200x100 RGB
